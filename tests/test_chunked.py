@@ -1,7 +1,8 @@
-"""Carry-in chunked recursion parity: tsengine/chunked.py vs the unchunked
-grouped-pandas operators (temporal.py). The chunked path must be
-BITWISE-identical — it runs the same sequential cores with exact state
-carry, so every double matches to the last ulp."""
+"""Carried-state recursion parity: the temporal.py recursions cut into
+pieces (``chunk_rows``, Arrow batch boundaries) vs the same operators run
+uncut. Every cut must be BITWISE-identical — each piece runs the same
+sequential core on the exact carried state, so every double matches to
+the last ulp."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from tsengine import chunked, temporal
+from tsengine import temporal
 
 
 def _series(spark, n_series=6, n_rows=333):
@@ -48,7 +49,7 @@ def _bitwise_equal(a: pd.DataFrame, b: pd.DataFrame, keys, float_cols) -> None:
 def test_kalman_chunked_bitwise_parity(spark, chunk_rows):
     df = _series(spark)
     ref = temporal.kalman_filter(df, q=0.25, r=1.0, tiebreak="event_id").toPandas()
-    got = chunked.kalman_filter_chunked(
+    got = temporal.kalman_filter(
         df, q=0.25, r=1.0, tiebreak="event_id", chunk_rows=chunk_rows
     ).toPandas()
     _bitwise_equal(
@@ -60,7 +61,7 @@ def test_kalman_chunked_bitwise_parity(spark, chunk_rows):
 def test_holt_linear_chunked_bitwise_parity(spark):
     df = _series(spark)
     ref = temporal.holt_linear(df, alpha=0.5, beta=0.25, tiebreak="event_id").toPandas()
-    got = chunked.holt_linear_chunked(
+    got = temporal.holt_linear(
         df, alpha=0.5, beta=0.25, tiebreak="event_id", chunk_rows=50
     ).toPandas()
     _bitwise_equal(
@@ -77,7 +78,7 @@ def test_holt_winters_chunked_bitwise_parity(spark, chunk_rows):
     ref = temporal.holt_winters(
         df, alpha=0.5, beta=0.25, gamma=0.25, m=4, tiebreak="event_id"
     ).toPandas()
-    got = chunked.holt_winters_chunked(
+    got = temporal.holt_winters(
         df, alpha=0.5, beta=0.25, gamma=0.25, m=4,
         tiebreak="event_id", chunk_rows=chunk_rows,
     ).toPandas()
@@ -85,6 +86,58 @@ def test_holt_winters_chunked_bitwise_parity(spark, chunk_rows):
         ref, got, ["conv_id", "metric", "event_id"],
         ["hw_level", "hw_trend", "hw_season", "hw_fcst"],
     )
+
+
+@pytest.fixture
+def tiny_arrow_batches(spark):
+    """Arrow batches of 7 records, so every series of ``_series`` spans
+    several batches and the state must carry across batch boundaries
+    (the registry's ~7-row series never cross one)."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    yield key
+    spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("chunk_rows", [None, 1, 3, 5])
+def test_carry_across_arrow_batches_bitwise(spark, tiny_arrow_batches, chunk_rows):
+    """Kalman, Holt linear and Holt-Winters (m=4, so chunk_rows 1 and 3
+    cut the init window) over 7-record batches equal the same operators
+    over the default batches, to the bit."""
+    key = tiny_arrow_batches
+    df = _series(spark, n_series=4, n_rows=61)
+    cases = [
+        (
+            lambda d, **kw: temporal.kalman_filter(d, tiebreak="event_id", **kw),
+            ["kf_level", "kf_velocity", "kf_innov", "kf_gain"],
+        ),
+        (
+            lambda d, **kw: temporal.holt_linear(
+                d, alpha=0.5, beta=0.25, tiebreak="event_id", **kw
+            ),
+            ["holt_level", "holt_trend", "holt_fcst"],
+        ),
+        (
+            lambda d, **kw: temporal.holt_winters(
+                d, alpha=0.5, beta=0.25, gamma=0.25, m=4, tiebreak="event_id", **kw
+            ),
+            ["hw_level", "hw_trend", "hw_season", "hw_fcst"],
+        ),
+    ]
+    for op, float_cols in cases:
+        got = op(df, chunk_rows=chunk_rows).toPandas()
+        spark.conf.set(key, "65536")
+        ref = op(df).toPandas()
+        spark.conf.set(key, "7")
+        _bitwise_equal(ref, got, ["conv_id", "metric", "event_id"], float_cols)
+
+
+def test_chunk_rows_must_be_positive(spark):
+    df = _series(spark, n_series=1, n_rows=3)
+    for bad in (0, -1):
+        with pytest.raises(ValueError):
+            temporal.kalman_filter(df, tiebreak="event_id", chunk_rows=bad)
 
 
 def test_short_series_emit_nothing_both_paths(spark):
@@ -102,20 +155,20 @@ def test_short_series_emit_nothing_both_paths(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    kc = chunked.kalman_filter_chunked(df, tiebreak="event_id", chunk_rows=2).toPandas()
+    kc = temporal.kalman_filter(df, tiebreak="event_id", chunk_rows=2).toPandas()
     ku = temporal.kalman_filter(df, tiebreak="event_id").toPandas()
     assert set(kc["conv_id"]) == set(ku["conv_id"]) == {"b"}
     assert len(kc) == len(ku) == 2
-    hc = chunked.holt_winters_chunked(
+    hc = temporal.holt_winters(
         df, alpha=0.5, beta=0.25, gamma=0.25, m=4, tiebreak="event_id", chunk_rows=2
     ).toPandas()
     assert len(hc) == 0
 
 
 def test_mega_series_small_memory_subprocess():
-    """The verdict's done-bar: ONE 10⁶-row series through the chunked path
+    """The verdict's done-bar: ONE 10⁶-row series through the cut path
     in a fresh small-heap session (1 GiB JVM), bitwise parity vs the
-    unchunked operator. The comparison happens JVM-side (join on the row
+    uncut operator. The comparison happens JVM-side (join on the row
     key, count any bitwise-unequal double) so the test itself never
     collects the series."""
     import subprocess
@@ -128,7 +181,7 @@ def test_mega_series_small_memory_subprocess():
         setdefault_simd()
         from pyspark.sql import SparkSession
         from pyspark.sql import functions as F
-        from tsengine import chunked, temporal
+        from tsengine import temporal
 
         spark = (
             SparkSession.builder.master("local[4]")
@@ -152,7 +205,7 @@ def test_mega_series_small_memory_subprocess():
             )
         )
         ref = temporal.kalman_filter(df, tiebreak="event_id")
-        got = chunked.kalman_filter_chunked(
+        got = temporal.kalman_filter(
             df, tiebreak="event_id", chunk_rows=100_000
         )
         cols = ["kf_level", "kf_velocity", "kf_innov", "kf_gain"]

@@ -137,6 +137,20 @@ def test_encode_many_rejects_non_tiling():
         codec.dodblk_encode_many(np.zeros(4, dtype=np.int64), [1], [4])
 
 
+def test_encode_many_rejects_empty_slice():
+    """A zero-length slice tiles trivially (start == previous end) but
+    reduceat would hand it the next slice's first value; it must raise."""
+    v = np.arange(4, dtype=np.float64)
+    t = np.arange(4, dtype=np.int64)
+    for starts, ends in (([0, 2, 2], [2, 2, 4]), ([0, 0], [0, 4]), ([0, 4], [4, 4])):
+        with pytest.raises(ValueError):
+            codec.xorblk_encode_many(v, starts, ends)
+        with pytest.raises(ValueError):
+            codec.dodblk_encode_many(t, starts, ends)
+    with pytest.raises(ValueError):
+        codec.xorblk_encode_many(np.zeros(0), [0], [0])
+
+
 def test_decode_many_bit_identical():
     rng = np.random.default_rng(91)
     for trial in range(100):

@@ -796,6 +796,22 @@ def test_flow_pagerank_sums_to_one_and_ranks_sink(spark):
     assert got["end"] > got["a"] and got["end"] > got["b"]
 
 
+def test_flow_pagerank_zero_iterations_is_uniform(spark):
+    """n_iter <= 0 runs no power step: every state keeps 1/n (a
+    descending sequence(1, n_iter) used to run 2 or more steps)."""
+    from tsengine import temporal
+
+    seqs = {"c1": ["a", "b", "end"], "c2": ["a", "end"]}
+    for n_iter in (0, -2):
+        got = {
+            r.state: r.pagerank
+            for r in temporal.flow_pagerank(
+                _evstream(spark, seqs), n_iter=n_iter
+            ).collect()
+        }
+        assert got == {s: round(1 / 3, 6) for s in ("a", "b", "end")}, n_iter
+
+
 # ---------------------------------------------------------------------------
 # forecast metrics / conformal interval (temporal)
 # ---------------------------------------------------------------------------

@@ -1017,12 +1017,12 @@ def matrix_profile(
     ``((d1+d2)+d3)+d4`` that the SQL oracle unrolls verbatim, and min
     is comparison-only — bitwise parity with no rounding.
 
-    Shape for 100 TB: one ``applyInPandas`` shuffle keyed by the series;
-    per-series cost O(n²·w) with n = points per series — fine for the
-    bounded per-conversation series this engine rolls up (and the
-    chunked-mega-series path caps n per task); for very long single
-    series the streaming STOMP ordering is the known refinement, same
-    output contract."""
+    Shape for 100 TB: one ``sorted_batch_apply`` shuffle keyed by the
+    series, in whole-series mode (every window is compared with every
+    other, so no carried state exists); per-series cost O(n²·w) with
+    n = points per series — fine for the bounded per-conversation series
+    this engine rolls up; for very long single series the streaming
+    STOMP ordering is the known refinement, same output contract."""
     ww = int(w)
 
     from pyspark.sql.types import DoubleType, StructField, StructType
@@ -1104,13 +1104,13 @@ def pelt_segments(
     both engines carry bitwise-identical DP state and pick identical
     backpointers; only the 6-dp print is rounded.
 
-    Shape for 100 TB: one ``applyInPandas`` shuffle keyed by the series;
-    per-series cost is O(n·|candidates|) — O(n) expected under PELT's
-    linear-penalty regime, O(n²) worst case on a changepoint-free series
-    where nothing prunes. The inner candidate scan is numpy-vectorized
+    Shape for 100 TB: one ``sorted_batch_apply`` shuffle keyed by the
+    series, in whole-series mode; per-series cost is O(n·|candidates|)
+    — O(n) expected under PELT's linear-penalty regime, O(n²) worst case
+    on a changepoint-free series where nothing prunes. The inner candidate scan is numpy-vectorized
     (identical elementwise IEEE ops, np.argmin = earliest-s tie-break),
     so even the worst case runs at array speed; the whole series still
-    sits in ONE task (no chunked carry-in on this path — the DP's
+    sits in ONE task (no carried-state mode on this path — the DP's
     backtrack needs global state), so a pathological single series
     bounds task memory at O(n)."""
     from pyspark.sql.types import (
@@ -1140,13 +1140,11 @@ def pelt_segments(
     )
     klist = list(keys)
 
-    def fn(pdf):
+    def segments(y):
+        """PELT over one series: (start, end, mean, cost) per segment,
+        rows start..end-1 (0-based)."""
         import numpy as np
-        import pandas as pd
 
-        pdf = pdf.sort_values(order, kind="mergesort")
-        y = pdf[value_col].to_numpy(dtype="float64")
-        ts = pdf[ts_col].reset_index(drop=True)
         n = len(y)
         # sequential prefix sums — S[t], Q[t] cover points 1..t
         # (np.add.accumulate is a strict left-to-right fold: bitwise
@@ -1182,33 +1180,39 @@ def pelt_segments(
             ends.append(t)
             t = bp[t]
         ends.reverse()
-        rows = []
-        kvals = [pdf.iloc[0][k] for k in klist]
-        for idx, b in enumerate(ends, 1):
-            a = bp[b]
+        segs = []
+        for b in ends:
+            a = int(bp[b])
             d = S[b] - S[a]
-            rows.append(
-                kvals
-                + [
-                    idx,
-                    len(ends),
-                    b - a,
-                    ts.iloc[a],
-                    ts.iloc[b - 1],
-                    d / (b - a),
-                    (Q[b] - Q[a]) - d * d / float(b - a),
-                ]
-            )
-        cols = klist + [
-            "seg_idx", "n_segs", "n_pts", "start_ts", "end_ts",
-            "seg_mean", "seg_cost",
-        ]
+            segs.append((a, b, d / (b - a), (Q[b] - Q[a]) - d * d / float(b - a)))
+        return segs
+
+    cols = klist + [
+        "seg_idx", "n_segs", "n_pts", "start_ts", "end_ts",
+        "seg_mean", "seg_cost",
+    ]
+
+    def batch_fn(pdf, starts, ends):
+        import pandas as pd
+
+        y_all = pdf[value_col].to_numpy(dtype="float64")
+        ts = pdf[ts_col]
+        rows = []
+        for s, e in zip(starts, ends):
+            kvals = [pdf[k].iat[s] for k in klist]
+            segs = segments(y_all[s:e])
+            for idx, (a, b, mean, cost) in enumerate(segs, 1):
+                rows.append(
+                    kvals
+                    + [idx, len(segs), b - a, ts.iat[s + a], ts.iat[s + b - 1],
+                       mean, cost]
+                )
         return pd.DataFrame(rows, columns=cols)
 
-    from tsengine.session import grouped_apply
+    from tsengine.session import sorted_batch_apply
 
     base = df.where(F.col(value_col).isNotNull())
-    return grouped_apply(base, klist, fn, out_schema)
+    return sorted_batch_apply(base, klist, order, batch_fn, out_schema)
 
 
 def sigma_clip(
@@ -1241,9 +1245,10 @@ def sigma_clip(
     bitwise-identical state through every round; only the final
     mean/sd print is rounded.
 
-    Shape for 100 TB: one grouped-pandas shuffle keyed by the series;
-    per-series cost O(max_peel · n), bounded state (the chunked
-    mega-series path caps n per task)."""
+    Shape for 100 TB: one ``sorted_batch_apply`` shuffle keyed by the
+    series, in whole-series mode (each peel takes a global argmax, so
+    no carried state exists); per-series cost O(max_peel · n) and
+    O(n) memory for the series in one task."""
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -1270,13 +1275,11 @@ def sigma_clip(
     klist = list(keys)
     ocol = order_cols[0]
 
-    def fn(pdf):
+    def peel(y):
+        """Peel one series (list of floats): per-point removal round
+        (0 = kept) and the survivors' count, mean and sd."""
         import math
 
-        import pandas as pd
-
-        pdf = pdf.sort_values(order, kind="mergesort")
-        y = [float(v) for v in pdf[value_col]]
         n = len(y)
         S = 0.0
         Q = 0.0
@@ -1305,32 +1308,38 @@ def sigma_clip(
             n_alive -= 1
         mean_f = S / n_alive if n_alive else 0.0
         var_f = (Q - S * mean_f) / n_alive if n_alive else 0.0
-        sd_f = math.sqrt(max(var_f, 0.0))
-        kvals = [pdf.iloc[0][k] for k in klist]
-        rows = []
-        for i in range(n):
-            rows.append(
-                kvals
-                + [
-                    pdf.iloc[i][ocol],
-                    y[i],
-                    rounds[i],
-                    1 if rounds[i] > 0 else 0,
-                    n_alive,
-                    mean_f,  # raw; callers round at the edge (F.round)
-                    sd_f,
-                ]
-            )
-        cols = klist + [
-            ocol, value_col, "peel_round", "is_outlier",
-            "n_kept", "mean_kept", "sd_kept",
-        ]
-        return pd.DataFrame(rows, columns=cols)
+        return rounds, n_alive, mean_f, math.sqrt(max(var_f, 0.0))
 
-    from tsengine.session import grouped_apply
+    def batch_fn(pdf, starts, ends):
+        import numpy as np
+        import pandas as pd
+
+        y = pdf[value_col].to_numpy(dtype="float64")
+        n = len(pdf)
+        rounds = np.zeros(n, dtype=np.int64)
+        n_kept = np.empty(n, dtype=np.int64)
+        mean_kept = np.empty(n)
+        sd_kept = np.empty(n)
+        for s, e in zip(starts, ends):
+            r, n_kept[s:e], mean_kept[s:e], sd_kept[s:e] = peel(y[s:e].tolist())
+            rounds[s:e] = r
+        return pd.DataFrame(
+            {
+                **{k: pdf[k] for k in klist},
+                ocol: pdf[ocol],
+                value_col: y,
+                "peel_round": rounds,
+                "is_outlier": (rounds > 0).astype(np.int64),
+                "n_kept": n_kept,
+                "mean_kept": mean_kept,  # raw; callers round at the edge
+                "sd_kept": sd_kept,
+            }
+        )
+
+    from tsengine.session import sorted_batch_apply
 
     base = df.where(F.col(value_col).isNotNull())
-    return grouped_apply(base, klist, fn, out_schema)
+    return sorted_batch_apply(base, klist, order, batch_fn, out_schema)
 
 
 # shared by the Spark side and the DuckDB oracle (entry `ts_hurst`):

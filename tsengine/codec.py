@@ -173,10 +173,17 @@ def _check_tiling(arr_len: int, starts: np.ndarray, ends: np.ndarray) -> None:
         if arr_len:
             raise ValueError("slices must tile the array")
         return
-    if starts[0] != 0 or ends[-1] != arr_len or (
-        len(starts) > 1 and not np.array_equal(starts[1:], ends[:-1])
+    # a zero-length slice would make reduceat return the NEXT slice's
+    # first element as its reduction, so empty slices are rejected too
+    if (
+        starts[0] != 0
+        or ends[-1] != arr_len
+        or not np.array_equal(starts[1:], ends[:-1])
+        or np.any(ends <= starts)
     ):
-        raise ValueError("slices must be contiguous, ascending, and tile the array")
+        raise ValueError(
+            "slices must be non-empty, contiguous, ascending, and tile the array"
+        )
 
 
 def _pack_varwidth_blocks(

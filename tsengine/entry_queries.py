@@ -2786,7 +2786,7 @@ FROM c
 )
 def ts_ewma(spark, sf_dir):
     """Per-conversation exponential smoothing (alpha = 0.25, recursive
-    ``temporal.ewma`` over applyInPandas) against the closed-form SQL
+    ``temporal.ewma`` over sorted_batch_apply) against the closed-form SQL
     oracle s_t = (1-a)^t·[x_0 + a·Σ(1-a)^(-i)·x_i] — the recursion and
     the prefix-sum form must agree to 4 decimals (safe: ≤ 99 rows per
     conversation keeps (1-a)^(-t) finite). Nulls filtered before
@@ -4875,7 +4875,7 @@ FROM hw
 def ts_holt_linear(spark, sf_dir):
     """Holt's two-parameter linear-trend smoothing (`temporal.holt_linear`,
     α=0.5, β=0.25): coupled level/trend recurrence with no closed form —
-    the Spark side is one applyInPandas shuffle keyed by the series,
+    the Spark side is one sorted_batch_apply shuffle keyed by the series,
     the oracle a DuckDB recursive CTE advancing every series in lockstep
     over the turn ordinal. The gains are exactly representable binary
     fractions and both sides evaluate the update in the same association
@@ -5037,21 +5037,19 @@ def ts_kalman(spark, sf_dir):
 
 
 def ts_kalman_chunked(spark, sf_dir):
-    """`chunked.kalman_filter_chunked` — the bounded-memory carry-in
-    variant of `ts_kalman`: the series splits into 8-row chunks (max
-    series here is 24 rows, so every long series genuinely crosses ≥ 2
-    chunk boundaries) and per-series state — (l, v, p11, p12, p22), five
-    doubles — carries across passes exactly as `streaming_cusum` carries
-    across micro-batches. Shares `temporal._kalman_seq` with the
-    unchunked operator, so it is bitwise-identical by construction; the
-    oracle is therefore the SAME recursive CTE as `ts_kalman`, making
-    the chunk-boundary parity driver-checkable. Per-task memory is
-    O(chunk_rows) regardless of series length (tests run one 10⁶-row
-    series in a 1 GiB session)."""
-    from tsengine import chunked
-
+    """`temporal.kalman_filter` with `chunk_rows=8` — `ts_kalman` fed to
+    its carried-state core in pieces of at most 8 rows (max series here
+    is 24 rows, so every long series genuinely crosses ≥ 2 piece
+    boundaries); per-series state — (l, v, p11, p12, p22), five doubles
+    — carries from piece to piece exactly as `streaming_cusum` carries
+    across micro-batches. Every piece runs `temporal._kalman_seq`, so
+    the output is bitwise-identical to the uncut run; the oracle is
+    therefore the SAME recursive CTE as `ts_kalman`, making the
+    cut-boundary parity driver-checkable. Per-task memory is O(Arrow
+    batch) regardless of series length (tests run one 10⁶-row series in
+    a 1 GiB session)."""
     ev = _events_long(spark, sf_dir).where(F.col("value").isNotNull())
-    out = chunked.kalman_filter_chunked(
+    out = temporal.kalman_filter(
         ev, q=0.25, r=1.0, on=("conv_id", "metric"),
         tiebreak="event_id", chunk_rows=8,
     )
@@ -5068,16 +5066,13 @@ q("ts_kalman_chunked", ORACLES["ts_kalman"])(ts_kalman_chunked)
 
 
 def ts_holt_winters_chunked(spark, sf_dir):
-    """`chunked.holt_winters_chunked` — bounded-memory carry-in variant
-    of `ts_holt_winters` with chunk_rows=3 < m=4, so the FPP init window
-    itself spans a chunk boundary (the phase-coded state's hard case:
-    the first chunk carries a partial init buffer, not yet a level).
-    Shares `temporal._hw_seq` with the unchunked operator — bitwise-
-    identical, same recursive-CTE oracle as `ts_holt_winters`."""
-    from tsengine import chunked
-
+    """`temporal.holt_winters` with `chunk_rows=3` < m=4, so the FPP
+    init window itself spans a piece boundary (the phase-coded state's
+    hard case: the first piece carries a partial init buffer, not yet a
+    level). Every piece runs `temporal._hw_seq` — bitwise-identical to
+    the uncut run, same recursive-CTE oracle as `ts_holt_winters`."""
     ev = _events_long(spark, sf_dir).where(F.col("value").isNotNull())
-    out = chunked.holt_winters_chunked(
+    out = temporal.holt_winters(
         ev, alpha=0.5, beta=0.25, gamma=0.25, m=4,
         on=("conv_id", "metric"), tiebreak="event_id", chunk_rows=3,
     )
@@ -5153,7 +5148,7 @@ def ts_lttb_downsample(spark, sf_dir):
     Steinarsson 2013) at n_out=8 — the sequential shape-optimal
     downsampler: each middle bucket's winner maximizes the triangle with
     the previously selected point and the next bucket's average. The
-    Spark side is one applyInPandas shuffle with the greedy loop in
+    Spark side is one sorted_batch_apply shuffle with the greedy loop in
     numpy; the oracle replays the recurrence as a DuckDB recursive CTE
     whose recursive term is a LATERAL argmax (ORDER BY area DESC LIMIT
     1), advancing every series in lockstep over the bucket ordinal. The

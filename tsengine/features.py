@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from tsengine.session import grouped_apply
+from tsengine.session import sorted_batch_apply
 
 # Wide-frame metric columns produced by the default pack.
 DEFAULT_METRICS = [
@@ -254,11 +254,12 @@ def default_pack(pdf: pd.DataFrame) -> pd.DataFrame:
 def apply_signal_pack_pandas(
     df: DataFrame, pack: SignalFn = default_pack, metrics: list[str] | None = None
 ) -> DataFrame:
-    """Run a pandas signal pack per conversation via applyInPandas.
+    """Run a pandas signal pack per conversation over
+    ``session.sorted_batch_apply``'s whole-series mode.
 
-    The group frame handed to ``pack`` IS rewemo's per-cell frame
-    (SURVEY §1.1). Sorting inside the pack is mandatory — Spark does not
-    guarantee intra-group order."""
+    The frame handed to ``pack`` is one conversation, rewemo's per-cell
+    frame (SURVEY §1.1), already in ``turn_idx`` order; packs sort
+    anyway, so they stay correct on any caller's frame."""
     metrics = metrics or DEFAULT_METRICS
     out_schema = ", ".join(
         ["conv_id string", "turn_idx int", "role string", "text string",
@@ -267,10 +268,13 @@ def apply_signal_pack_pandas(
     )
     cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"] + metrics
 
-    def runner(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pack(pdf)[cols]
+    def batch_fn(pdf: pd.DataFrame, starts, ends) -> pd.DataFrame:
+        return pd.concat(
+            [pack(pdf.iloc[s:e])[cols] for s, e in zip(starts, ends)],
+            ignore_index=True,
+        )
 
-    return grouped_apply(df, ["conv_id"], runner, out_schema)
+    return sorted_batch_apply(df, ["conv_id"], ["turn_idx"], batch_fn, out_schema)
 
 
 def rank_normalize(

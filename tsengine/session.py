@@ -15,6 +15,28 @@ from pyspark.sql import SparkSession
 from tsengine.env_tuning import setdefault_simd
 
 
+# Share of physical memory the default driver heap takes. The JVM's
+# resident size runs above its heap (metaspace, code cache, direct
+# buffers) and the Python workers live beside it, so the heap stays well
+# under half of RAM.
+HEAP_SHARE = 0.4
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` sized from the host: ``HEAP_SHARE`` of
+    MemTotal, in MiB. Falls back to 4g where /proc/meminfo is missing
+    (non-Linux hosts). ``TSENGINE_DRIVER_MEM`` overrides it."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    kib = int(line.split()[1])
+                    return f"{int(kib / 1024 * HEAP_SHARE)}m"
+    except OSError:
+        pass
+    return "4g"
+
+
 def get_spark(
     app_name: str = "tsengine",
     master: str | None = None,
@@ -75,11 +97,14 @@ def get_spark(
             os.environ.get("TSENGINE_PARQUET_DICT", "false"),
         )
         # heap is lazily allocated — size for the worst stage, not the
-        # average: at ~35M turns the wide-rollup hash agg + chunked windows
-        # cross 24g's execution-memory threshold and spill, and 8 concurrent
-        # spilling tasks on virtio disk ran 3x slower (measured 489s -> 161s
-        # for the same job at 48g)
-        .config("spark.driver.memory", os.environ.get("TSENGINE_DRIVER_MEM", "48g"))
+        # average (at ~35M turns the wide-rollup hash agg spills below 24g
+        # and 8 concurrent spilling tasks on virtio disk ran 3x slower),
+        # but never past the host: a heap larger than physical RAM gets
+        # the JVM OOM-killed before it collects. See default_driver_memory.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("TSENGINE_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # committer v2: task outputs move to the final location at task
@@ -122,89 +147,114 @@ def stop_spark() -> None:
     # getOrCreate() after stop() honors a new master.
 
 
-def grouped_apply(df, keys: list[str], fn, schema):
-    """``groupBy(keys).applyInPandas`` with an EXPLICIT pre-repartition on
-    the group keys — the grouped-UDF parallelism fix.
+def sorted_batch_apply(
+    df, keys: list[str], order: list[str], fn, schema,
+    carry: bool = False, chunk_rows: int | None = None,
+):
+    """The engine's one per-series Python primitive: every series (rows
+    sharing ``keys``) is handed to ``fn`` in ``order``, streamed through
+    mapInPandas as Arrow batches.
 
-    Why: AQE coalesces post-shuffle partitions by BYTES, but a python
-    grouped-UDF stage's cost scales with GROUP COUNT (per-group Arrow
-    frame + python dispatch), not bytes. A compressed/blob-sized or
-    small-SF input folds into one post-shuffle partition and every group
-    then runs serially in a single python task — measured 9.9 s for a
-    NO-OP grouped UDF over 39 K chunk-table rows (12 MB) at sf0.1, vs
-    2.4 s for the real merge once parallelized. An explicit
-    ``repartition(N, keys)`` is exempt from AQE coalescing and its hash
-    partitioning satisfies the groupBy's clustering requirement, so
-    Catalyst inserts NO second exchange — same shuffle count, restored
-    parallelism. N = ``spark.sql.shuffle.partitions``, the same
-    cluster-sized knob every other exchange here uses (AQE's skew
-    handling cannot split a pandas group anyway — rows of one group must
-    co-locate — so nothing real is lost at 100 TB either).
-    """
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        df.repartition(n_part, *keys)
-        .groupBy(*keys)
-        .applyInPandas(fn, schema=schema)
-    )
+    Shape: one exchange. ``repartition(N, keys)`` with N =
+    ``spark.sql.shuffle.partitions`` (an explicit repartition is exempt
+    from AQE coalescing, which sizes partitions by bytes while a
+    per-series Python stage costs per series — a small input would
+    otherwise fold into one partition and run every series in one
+    task), then ``sortWithinPartitions(keys + order)`` so each series is
+    contiguous and pre-sorted, then numpy change-point detection finds
+    the series boundaries inside each batch. Per-series cost is an index
+    slice, not the ~5 ms per group of ``groupBy().applyInPandas``.
 
+    Two modes share that pipeline:
 
-def sorted_batch_apply(df, keys: list[str], order: list[str], batch_fn, schema):
-    """High-group-count fast path for per-series operators.
-
-    ``groupBy().applyInPandas`` pays a per-GROUP toll (one Arrow batch,
-    one pandas DataFrame construction, one Python call, one result
-    concat per group) — measured ~5 ms/group, which dominates wall time
-    when series are short and numerous (75 K groups of ~13 rows: the
-    whole operator is pandas overhead, not compute). This helper keeps
-    the same one-exchange shape but streams each partition through
-    mapInPandas as FULL Arrow batches: repartition on the keys (exempt
-    from AQE coalescing — see ``grouped_apply``), sortWithinPartitions
-    (keys + order) so groups are contiguous and pre-sorted, then numpy
-    change-point detection hands ``batch_fn`` whole batches plus group
-    boundaries. Per-group cost collapses to an index slice.
-
-    ``batch_fn(pdf, starts, ends) -> pdf_out`` processes EVERY group in
-    the batch (group g = rows starts[g]:ends[g], already sorted by
-    ``order``) and returns one DataFrame matching ``schema``. Groups
-    never span batches: the last (possibly incomplete) group of each
-    incoming Arrow batch is carried into the next one, so ``batch_fn``
-    always sees complete series — same per-task memory bound as
-    applyInPandas (one batch + one series).
+    - whole-series (default): ``fn(pdf, starts, ends) -> pdf_out``
+      processes every series in the batch (series g = rows
+      ``starts[g]:ends[g]``) and returns one DataFrame matching
+      ``schema``. A series never spans two calls: the last, possibly
+      incomplete series of each Arrow batch is carried into the next
+      batch, so ``fn`` always sees complete series. Memory per task is
+      one batch plus one series — the mode for operators that need the
+      whole series at once (a DP backtrack, a global argmax, all
+      windows).
+    - carried state (``carry=True``): ``fn(piece, state) -> (out,
+      state)`` is called on consecutive pieces of each series, in order,
+      and the returned state is passed to the next piece of the same
+      series (``None`` at the start of every series). ``piece`` maps
+      each input column to a numpy view of the piece's rows; ``out``
+      maps each ``schema`` column, in order, to the values of the rows
+      the piece emits. (Plain arrays, not DataFrames: slicing, extending
+      and concatenating a pandas frame per piece measured ~800 us per
+      series against ~30 us for the arrays, 5 000 short Kalman series
+      on one core of a 4-core host.) A piece never spans an
+      Arrow batch and holds at most ``chunk_rows`` rows (``None``: no
+      cut beyond the batch). The state is a Python local that crosses
+      batch boundaries, so memory per task is O(batch) however long the
+      series — ``spark.sql.execution.arrow.maxRecordsPerBatch`` is the
+      memory bound — and the operator is still one job: no driver loop,
+      no broadcast, no collect. Exact for any recursion whose state at a
+      cut is what the unbroken loop holds there.
     """
     import numpy as np
     import pandas as pd
 
+    if chunk_rows is not None and (not carry or int(chunk_rows) < 1):
+        raise ValueError(
+            f"chunk_rows must be >= 1 and needs carry=True, got {chunk_rows}"
+        )
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     d = df.repartition(n_part, *keys).sortWithinPartitions(*keys, *order)
 
-    def group_bounds(pdf):
-        n = len(pdf)
+    def group_starts(key_arrays, n):
         change = np.zeros(n, dtype=bool)
         change[0] = True
-        for k in keys:
-            a = pdf[k].to_numpy()
+        for a in key_arrays:
             change[1:] |= a[1:] != a[:-1]
-        starts = np.flatnonzero(change)
-        return starts, np.append(starts[1:], n)
+        return np.flatnonzero(change)
 
-    def run(batches):
+    def run_whole(batches):
         tail = None
         for pdf in batches:
             if tail is not None and len(tail):
                 pdf = pd.concat([tail, pdf], ignore_index=True)
-            if not len(pdf):
+            n = len(pdf)
+            if not n:
                 continue
-            starts, ends = group_bounds(pdf)
+            starts = group_starts([pdf[k].to_numpy() for k in keys], n)
             tail = pdf.iloc[starts[-1]:].reset_index(drop=True)
             if len(starts) == 1:  # whole batch is one (continuing) group
                 continue
-            # hand batch_fn ONLY the complete groups — the carried tail
-            # must never appear in its input frame
+            # hand fn ONLY the complete groups — the carried tail must
+            # never appear in its input frame
             done = pdf.iloc[:starts[-1]].reset_index(drop=True)
-            yield batch_fn(done, starts[:-1], ends[:-1])
+            yield fn(done, starts[:-1], starts[1:])
         if tail is not None and len(tail):
-            starts, ends = group_bounds(tail)
-            yield batch_fn(tail, starts, ends)
+            n = len(tail)
+            starts = group_starts([tail[k].to_numpy() for k in keys], n)
+            yield fn(tail, starts, np.append(starts[1:], n))
 
-    return d.mapInPandas(run, schema)
+    def run_carry(batches):
+        last_key, state = None, None
+        for pdf in batches:
+            n = len(pdf)
+            if not n:
+                continue
+            cols = {c: pdf[c].to_numpy() for c in pdf.columns}
+            starts = group_starts([cols[k] for k in keys], n)
+            ends = np.append(starts[1:], n)
+            step = n if chunk_rows is None else int(chunk_rows)
+            outs = []
+            for g, (s, e) in enumerate(zip(starts, ends)):
+                # only the batch's first series can continue the previous
+                # batch's last one
+                if g or tuple(cols[k][0] for k in keys) != last_key:
+                    state = None
+                for a in range(s, e, step):
+                    b = min(a + step, e)
+                    out, state = fn({c: v[a:b] for c, v in cols.items()}, state)
+                    outs.append(out)
+            last_key = tuple(cols[k][-1] for k in keys)
+            yield pd.DataFrame(
+                {c: np.concatenate([o[c] for o in outs]) for c in outs[0]}
+            )
+
+    return d.mapInPandas(run_carry if carry else run_whole, schema)

@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from tsengine.session import grouped_apply, sorted_batch_apply
+from tsengine.session import sorted_batch_apply
 
 
 def asof_join(
@@ -188,10 +188,13 @@ def ewma(
     window aggregate cannot express without O(n²) per-row weight sums.
     Adds ``ewma`` (double).
 
-    Implementation: ``applyInPandas`` — one shuffle keyed by ``on``,
-    Arrow-batched, the recursion runs in pandas' C ewm kernel. This is
-    the documented legitimate use of the Python path (per-key recursive
-    state); everything stateless stays JVM-side. Nulls in ``value_col``
+    Implementation: ``session.sorted_batch_apply`` (whole-series mode)
+    — one shuffle keyed by ``on``, Arrow-batched; the recursion runs in
+    pandas' C ewm kernel, once per batch over all its series (grouped
+    ewm runs the same kernel per group as a lone series' ewm, so the
+    values are those of a per-series call). This is the documented
+    legitimate use of the Python path (per-key recursive state);
+    everything stateless stays JVM-side. Nulls in ``value_col``
     must be filtered/filled upstream (pandas decays weights across gaps,
     SQL closed forms skip them — the two disagree on nulls).
 
@@ -210,12 +213,19 @@ def ewma(
         list(df.schema.fields) + [StructField("ewma", DoubleType())]
     )
 
-    def fn(pdf):
-        pdf = pdf.sort_values(order, kind="mergesort")
-        pdf["ewma"] = pdf[value_col].ewm(alpha=alpha, adjust=False).mean()
-        return pdf
+    def batch_fn(pdf, starts, ends):
+        return pdf.assign(ewma=_series_ewm(pdf[value_col], starts, ends, alpha))
 
-    return grouped_apply(df, [on], fn, out_schema)
+    return sorted_batch_apply(df, [on], order, batch_fn, out_schema)
+
+
+def _series_ewm(x: pd.Series, starts, ends, alpha: float) -> np.ndarray:
+    """``ewm(alpha, adjust=False).mean()`` of every series
+    ``x[starts[g]:ends[g]]`` in one grouped call, in row order."""
+    gid = np.repeat(np.arange(len(starts)), ends - starts)
+    return (
+        x.groupby(gid, sort=True).ewm(alpha=alpha, adjust=False).mean().to_numpy()
+    )
 
 
 def counter_increase(
@@ -480,12 +490,13 @@ def brown_smooth(
     update NIST/engineering-statistics handbooks call double exponential
     smoothing). Adds ``brown_level`` / ``brown_trend`` / ``brown_fcst``.
 
-    Implementation mirrors ``ewma``: one ``applyInPandas`` shuffle keyed
-    by ``on``, both recursions in pandas' C ewm kernel over the sorted
-    key partition — per-key recursive state is the documented legitimate
-    Python path. Oracle path: the prefix-sum closed form applied twice
-    (s2's closed form takes s1's closed form as its input series), valid
-    under the same (1−α)^(−t) range bound as ``ewma``.
+    Implementation mirrors ``ewma``: one ``sorted_batch_apply`` shuffle
+    keyed by ``on``, both recursions in pandas' C ewm kernel over the
+    sorted series of each batch — per-key recursive state is the
+    documented legitimate Python path. Oracle path: the prefix-sum
+    closed form applied twice (s2's closed form takes s1's closed form
+    as its input series), valid under the same (1−α)^(−t) range bound
+    as ``ewma``.
 
     Nulls in ``value_col`` must be filtered/filled upstream — the same
     contract as ``ewma`` (pandas ewm carries the last smoothed value
@@ -504,16 +515,16 @@ def brown_smooth(
     )
     coef = alpha / (1.0 - alpha)
 
-    def fn(pdf):
-        pdf = pdf.sort_values(order, kind="mergesort")
-        s1 = pdf[value_col].ewm(alpha=alpha, adjust=False).mean()
-        s2 = s1.ewm(alpha=alpha, adjust=False).mean()
-        pdf["brown_level"] = 2.0 * s1 - s2
-        pdf["brown_trend"] = coef * (s1 - s2)
-        pdf["brown_fcst"] = pdf["brown_level"] + pdf["brown_trend"]
-        return pdf
+    def batch_fn(pdf, starts, ends):
+        s1 = _series_ewm(pdf[value_col], starts, ends, alpha)
+        s2 = _series_ewm(pd.Series(s1), starts, ends, alpha)
+        level = 2.0 * s1 - s2
+        trend = coef * (s1 - s2)
+        return pdf.assign(
+            brown_level=level, brown_trend=trend, brown_fcst=level + trend
+        )
 
-    return grouped_apply(df, [on], fn, out_schema)
+    return sorted_batch_apply(df, [on], order, batch_fn, out_schema)
 
 
 def holt_linear(
@@ -524,6 +535,7 @@ def holt_linear(
     ts_col: str = "ts",
     value_col: str = "value",
     tiebreak: str | None = None,
+    chunk_rows: int | None = None,
 ) -> DataFrame:
     """Holt's linear-trend smoothing per series — the two-parameter
     generalization of ``brown_smooth`` (Brown is the α=β special case up
@@ -539,12 +551,13 @@ def holt_linear(
 
     The recurrence is genuinely sequential in TWO coupled states, so
     there is no ewm/prefix-sum closed form — this is the documented
-    legitimate Python path: one ``applyInPandas`` shuffle keyed by the
-    series key, a per-group state loop inside the Arrow batch. Groups
-    run in parallel across executors; a single series serializes within
-    one task — for unbounded series lengths use
-    ``chunked.holt_linear_chunked`` (bitwise-identical via the shared
-    ``_holt_seq`` core, O(chunk_rows) per-task memory).
+    legitimate Python path: one ``session.sorted_batch_apply`` job in
+    carried-state mode, the ``_holt_seq`` state loop over each piece of
+    each series with (l, b) carried between pieces. Series run in
+    parallel across tasks; a single series serializes within one task
+    in O(Arrow batch) memory. ``chunk_rows`` adds a cut of at most that
+    many rows per piece (``None``: none); the output is bitwise-
+    identical at any value.
 
     Cross-engine parity: the update expressions are written in ONE
     association order and mirrored verbatim by the SQL oracle's
@@ -567,29 +580,24 @@ def holt_linear(
     a, b_gain = float(alpha), float(beta)
     one_a, one_b = 1.0 - a, 1.0 - b_gain
 
-    def batch_fn(pdf, starts, ends):
-        y = pdf[value_col].to_numpy(dtype="float64")
-        n = len(pdf)
-        lv_a = np.empty(n)
-        tr_a = np.empty(n)
-        for s, e in zip(starts, ends):
-            lv, tr, _ = _holt_seq(y[s:e], None, a, one_a, b_gain, one_b)
-            lv_a[s:e] = lv
-            tr_a[s:e] = tr
-        out = pdf.copy(deep=False)
-        out["holt_level"] = lv_a
-        out["holt_trend"] = tr_a
-        # elementwise float64 add == the scalar l + b of the loop path
-        out["holt_fcst"] = lv_a + tr_a
-        return out
+    def core(piece, state):
+        lv, tr, state = _holt_seq(
+            piece[value_col].astype("float64", copy=False), state,
+            a, one_a, b_gain, one_b,
+        )
+        lv, tr = np.asarray(lv, dtype="float64"), np.asarray(tr, dtype="float64")
+        # elementwise float64 add == the scalar l + b of the loop
+        out = {**piece, "holt_level": lv, "holt_trend": tr, "holt_fcst": lv + tr}
+        return out, state
 
-    return sorted_batch_apply(df, list(on), order, batch_fn, out_schema)
+    return sorted_batch_apply(
+        df, list(on), order, core, out_schema, carry=True, chunk_rows=chunk_rows
+    )
 
 
 def _holt_seq(y, state, a, one_a, b_gain, one_b):
-    """Holt linear-trend recurrence shared by ``holt_linear`` and
-    ``chunked.holt_linear_chunked`` — one copy of the float ops for
-    bitwise parity between the paths. ``state=None`` cold-starts
+    """Holt linear-trend recurrence over one piece of a series
+    (``holt_linear``'s carried-state core). ``state=None`` cold-starts
     (l=y[0], b=0; the init row EMITS, matching ``holt_linear``'s
     contract); otherwise ``state=(l, b)`` carries in and every row
     emits. Returns ``(lv, tr, new_state)`` with one output per row."""
@@ -624,6 +632,7 @@ def holt_winters(
     ts_col: str = "ts",
     value_col: str = "value",
     tiebreak: str | None = None,
+    chunk_rows: int | None = None,
 ) -> DataFrame:
     """Holt-Winters ADDITIVE seasonal smoothing per series — the triple
     exponential extension of ``holt_linear`` with an m-slot seasonal
@@ -639,15 +648,17 @@ def holt_winters(
     series shorter than m+1 points emit nothing (documented contract).
 
     Same execution shape and parity rules as ``holt_linear``: one
-    ``applyInPandas`` shuffle keyed by the series (the recurrence has
-    three coupled states, no prefix-sum closed form), groups parallel
-    across executors; every update is written in ONE association order
+    ``sorted_batch_apply`` job in carried-state mode (the recurrence has
+    three coupled states, no prefix-sum closed form), series parallel
+    across tasks; every update is written in ONE association order
     mirrored by the oracle's recursive CTE, whose seasonal state rides
     along as a DOUBLE[m] list column (slide = s[2:] ++ [s_t]) — with
     exactly-representable gains both engines stay bitwise-identical at
-    every step. Nulls must be filtered upstream. For unbounded series
-    lengths use ``chunked.holt_winters_chunked`` (bitwise-identical via
-    the shared ``_hw_seq`` core, O(chunk_rows) per-task memory)."""
+    every step. Nulls must be filtered upstream. The carried state is
+    phase-tagged (see ``_hw_seq``), so a piece may end inside the
+    m-row init window: ``chunk_rows`` (``None``: no cut beyond the
+    Arrow batch) can be any positive size, including < m, and the
+    output stays bitwise-identical."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     order = [ts_col] if tiebreak is None else [ts_col, tiebreak]
@@ -664,39 +675,23 @@ def holt_winters(
     one_a, one_b, one_g = 1.0 - a, 1.0 - bg, 1.0 - g
     mm = int(m)
 
-    def batch_fn(pdf, starts, ends):
-        y = pdf[value_col].to_numpy(dtype="float64")
-        n = len(pdf)
-        keep = np.zeros(n, dtype=bool)
-        lv_a = np.empty(n)
-        tr_a = np.empty(n)
-        se_a = np.empty(n)
-        fc_a = np.empty(n)
-        for s, e in zip(starts, ends):
-            if e - s <= mm:
-                continue  # too short to init: nothing emits
-            start, lv, tr, se, fc, _ = _hw_seq(
-                y[s:e], None, a, one_a, bg, one_b, g, one_g, mm
-            )
-            keep[s + start:e] = True
-            lv_a[s + start:e] = lv
-            tr_a[s + start:e] = tr
-            se_a[s + start:e] = se
-            fc_a[s + start:e] = fc
-        out = pdf[keep].copy()
-        out["hw_level"] = lv_a[keep]
-        out["hw_trend"] = tr_a[keep]
-        out["hw_season"] = se_a[keep]
-        out["hw_fcst"] = fc_a[keep]
-        return out
+    def core(piece, state):
+        start, lv, tr, se, fc, state = _hw_seq(
+            piece[value_col].astype("float64", copy=False), state,
+            a, one_a, bg, one_b, g, one_g, mm,
+        )
+        out = {c: v[start:] for c, v in piece.items()}
+        out.update(hw_level=lv, hw_trend=tr, hw_season=se, hw_fcst=fc)
+        return out, state
 
-    return sorted_batch_apply(df, list(on), order, batch_fn, out_schema)
+    return sorted_batch_apply(
+        df, list(on), order, core, out_schema, carry=True, chunk_rows=chunk_rows
+    )
 
 
 def _hw_seq(y, state, a, one_a, bg, one_b, g, one_g, mm):
-    """Holt-Winters additive recurrence shared by ``holt_winters`` and
-    ``chunked.holt_winters_chunked`` — one copy of the float ops for
-    bitwise parity between the paths.
+    """Holt-Winters additive recurrence over one piece of a series
+    (``holt_winters``'s carried-state core).
 
     State is a tuple tagged by phase: ``("init", buf)`` while fewer than
     m observations have been seen (buf = those values, in order) and
@@ -934,6 +929,7 @@ def kalman_filter(
     ts_col: str = "ts",
     value_col: str = "value",
     tiebreak: str | None = None,
+    chunk_rows: int | None = None,
 ) -> DataFrame:
     """1-D constant-velocity Kalman filter per series — the optimal
     linear denoiser/tracker for a locally-linear signal in white noise
@@ -957,12 +953,15 @@ def kalman_filter(
     step; only the 6-dp print needs the usual +5e-10 nudge. Nulls must
     be filtered upstream.
 
-    Shape for 100 TB: one ``applyInPandas`` shuffle keyed by the series
-    (the Riccati recursion has no prefix-sum closed form), groups
-    parallel across executors, O(1) state per series. A single task
-    holds one full series; for unbounded series lengths use
-    ``chunked.kalman_filter_chunked`` — bitwise-identical (shared
-    ``_kalman_seq`` core) with O(chunk_rows) per-task memory."""
+    Shape for 100 TB: one ``session.sorted_batch_apply`` job in
+    carried-state mode — one exchange keyed by the series (the Riccati
+    recursion has no prefix-sum closed form), series parallel across
+    tasks, O(1) state per series carried piece to piece, so per-task
+    memory is O(Arrow batch) however long the series. ``chunk_rows``
+    cuts each series into pieces of at most that many rows on top of
+    the batch cut (``None``: no extra cut); the output is bitwise-
+    identical at any value, since every piece runs the same
+    ``_kalman_seq`` core on the exact carried state."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     order = [ts_col] if tiebreak is None else [ts_col, tiebreak]
@@ -978,47 +977,28 @@ def kalman_filter(
     qq, rr = float(q), float(r)
     q11, q12, q22 = 0.25 * qq, 0.5 * qq, qq
 
-    def batch_fn(pdf, starts, ends):
-        import numpy as np
+    def core(piece, state):
+        start, ls, vs, innovs, gains, state = _kalman_seq(
+            piece[value_col].astype("float64", copy=False), state,
+            q11, q12, q22, rr,
+        )
+        out = {c: v[start:] for c, v in piece.items()}
+        out.update(kf_level=ls, kf_velocity=vs, kf_innov=innovs, kf_gain=gains)
+        return out, state
 
-        y = pdf[value_col].to_numpy(dtype="float64")
-        n = len(pdf)
-        keep = np.zeros(n, dtype=bool)
-        lv = np.empty(n)
-        vv = np.empty(n)
-        iv = np.empty(n)
-        gv = np.empty(n)
-        for s, e in zip(starts, ends):
-            if e - s < 2:
-                continue  # <2 points: nothing emits (same as before)
-            _, ls, vs, innovs, gains, _ = _kalman_seq(
-                y[s:e], None, q11, q12, q22, rr
-            )
-            keep[s + 1:e] = True
-            lv[s + 1:e] = ls
-            vv[s + 1:e] = vs
-            iv[s + 1:e] = innovs
-            gv[s + 1:e] = gains
-        out = pdf[keep].copy()
-        out["kf_level"] = lv[keep]
-        out["kf_velocity"] = vv[keep]
-        out["kf_innov"] = iv[keep]
-        out["kf_gain"] = gv[keep]
-        return out
-
-    return sorted_batch_apply(df, list(on), order, batch_fn, out_schema)
+    return sorted_batch_apply(
+        df, list(on), order, core, out_schema, carry=True, chunk_rows=chunk_rows
+    )
 
 
 def _kalman_seq(y, state, q11, q12, q22, rr):
-    """The constant-velocity Kalman recurrence, shared by the per-series
-    batch path (``kalman_filter``) and the chunked carry-in path
-    (``chunked.kalman_filter_chunked``) — ONE copy of the float
-    expressions, so the two paths are bitwise-identical by construction.
+    """The constant-velocity Kalman recurrence over one piece of a
+    series (``kalman_filter``'s carried-state core).
 
     ``state=None`` is a cold start: y[0] is consumed as the init
     observation (level=y[0], velocity=0, P=I) and emits nothing.
     Otherwise ``state=(l, v, p11, p12, p22)`` carried from the previous
-    chunk and every row emits. Returns
+    piece and every row emits. Returns
     ``(start, ls, vs, innovs, gains, new_state)`` where ``start`` is the
     index of the first emitting row."""
     n = len(y)
@@ -1509,8 +1489,11 @@ def flow_pagerank(
         )
 
     r0 = F.transform(F.col("nodes"), lambda _: F.lit(1.0) / nn)
-    r_final = F.aggregate(
-        F.sequence(F.lit(1), F.lit(int(n_iter))), r0, step
+    # sequence(1, k) counts DOWN for k < 1, so zero (or negative)
+    # iterations must skip the fold and return the start vector
+    r_final = (
+        r0 if n_iter <= 0
+        else F.aggregate(F.sequence(F.lit(1), F.lit(int(n_iter))), r0, step)
     )
     return (
         folded.select("nodes", r_final.alias("r"))
@@ -1538,7 +1521,7 @@ def forecast_metrics(
     The Holt recursion is bitwise-identical cross-engine (binary-fraction
     gains, same association order), so every error term is an identical
     double; only the ≤n-term metric sums are float-order sensitive
-    (round + nudge). One applyInPandas pass for the recursion (same as
+    (round + nudge). One sorted_batch_apply pass for the recursion (same as
     holt_linear), one lag window over its output, one groupBy.
     """
     out = holt_linear(df, alpha=alpha, beta=beta, on=on, tiebreak="event_id")
