@@ -106,7 +106,7 @@ def transcript_pipeline(spark, out_root: str, raw: str) -> dict[str, float]:
     t0 = time.time()
     t = spark.read.parquet(raw)
     wide = features.derive_features_chunked(t)
-    g1m = rollup.rollup_from_raw_wide_stats(wide, mets, "1m")
+    g1m = rollup.rollup(wide, rollup.STATS, "1m", mets)
     g1m.write.mode("overwrite").parquet(f"{out_root}/tier_1m_wide")
     t1 = time.time()
     # overlapped publish: each tier's long-form unpivot write runs
@@ -145,8 +145,9 @@ def _headline_thunks(spark, sf_dir: str) -> dict[str, object]:
     for the timed pass."""
     thunks: dict[str, object] = {}
     ev = eq._events_long(spark, sf_dir)
+    S = rollup.STATS
     thunks["tier_cascade_events"] = lambda: count_action(
-        rollup.cascade(rollup.cascade(rollup.rollup_from_raw(ev, "1m"), "1h"), "1d"))
+        rollup.cascade(rollup.cascade(rollup.rollup(ev, S, "1m"), S, "1h"), S, "1d"))
     thunks["indicators"] = lambda: count_action(indicators.indicator_battery(ev))
     view = ev.where(F.col("metric") == "view")
     thunks["gapfill_linear"] = lambda: count_action(

@@ -988,6 +988,41 @@ def test_mann_kendall_many_series_batch_pass(spark):
         assert gz == pytest.approx(z, abs=2e-5), k
 
 
+@pytest.mark.parametrize("block_cells", [None, 1, 5, 17])
+def test_mk_s_exact_in_row_blocks(monkeypatch, block_cells):
+    # S summed block by block equals the brute-force pair sum, ties
+    # included, whatever the block size (tiny blocks cut every series
+    # into many blocks, default blocks keep a short series whole)
+    if block_cells is not None:
+        monkeypatch.setattr(complexity, "_MK_BLOCK_CELLS", block_cells)
+    rng = np.random.default_rng(73)
+    for n in (0, 1, 2, 3, 8, 23, 60):
+        x = rng.integers(0, 6, n).astype(np.int64)  # few values: many ties
+        brute = sum(
+            int(np.sign(x[j] - x[i])) for i in range(n) for j in range(i + 1, n)
+        )
+        assert complexity._mk_s(x) == brute, (n, block_cells)
+
+
+def test_mk_s_memory_bounded():
+    # n = 4000: a dense n×n int64 sign matrix is 128 MB (the old code held
+    # two or three); the row blocks keep the traced peak far below that
+    import tracemalloc
+
+    n = 4000
+    x = np.arange(n, dtype=np.int64)
+    x[::7] = 3  # ties and inversions, still an exactly known S below
+    want = sum(int(np.sign(x[i + 1:] - x[i]).sum()) for i in range(n))
+    tracemalloc.start()
+    try:
+        got = complexity._mk_s(x)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert got == want
+    assert peak < 64 * 2**20, peak
+
+
 def test_mann_kendall_rejects_nulls(spark):
     rows = [("c", T0, "m", None, 0)] + [
         ("c", T0 + dt.timedelta(minutes=i), "m", float(i), i)

@@ -13,7 +13,9 @@ from tsengine import features, rollup
 
 def _tiers(transcripts):
     long = features.to_long(features.derive_features(transcripts))
-    return long, rollup.build_tiers(long)
+    t1m = rollup.rollup(long, rollup.STATS, "1m")
+    t1h = rollup.cascade(t1m, rollup.STATS, "1h")
+    return long, {"1m": t1m, "1h": t1h, "1d": rollup.cascade(t1h, rollup.STATS, "1d")}
 
 
 def _norm(pdf):
@@ -48,7 +50,7 @@ def test_1m_tier_matches_pandas_oracle(spark, transcripts):
 def test_cascade_consistency(spark, transcripts):
     long, tiers = _tiers(transcripts)
     # 1h from 1m must equal 1h computed directly from raw
-    direct_1h = _norm(rollup.rollup_from_raw(long, "1h").toPandas())
+    direct_1h = _norm(rollup.rollup(long, rollup.STATS, "1h").toPandas())
     cascaded_1h = _norm(tiers["1h"].toPandas())
     assert len(direct_1h) == len(cascaded_1h)
     assert (direct_1h["cnt"].to_numpy() == cascaded_1h["cnt"].to_numpy()).all()
@@ -121,11 +123,10 @@ def test_hist_sketch_cascade_and_quantiles(spark):
     ev = df.select("conv_id", F.timestamp_seconds("epoch").alias("ts"), "metric", "value")
 
     bounds = rollup.DEFAULT_HIST_BOUNDS
-    nbins = len(bounds) + 1
-    h1m = rollup.rollup_hist(ev, bounds, "1m")
-    h1h_cascade = rollup.cascade_hist(h1m, "1h", nbins)
+    h1m = rollup.rollup(ev, rollup.HIST, "1m")
+    h1h_cascade = rollup.cascade(h1m, rollup.HIST, "1h")
     # direct 1h histogram over raw
-    direct = rollup.rollup_hist(ev, bounds, "1h")
+    direct = rollup.rollup(ev, rollup.HIST, "1h")
     a = {(r["conv_id"], r["bucket_ts"], r["metric"]): (r["cnt"], list(r["hist"]))
          for r in h1h_cascade.collect()}
     b = {(r["conv_id"], r["bucket_ts"], r["metric"]): (r["cnt"], list(r["hist"]))
@@ -151,42 +152,6 @@ def test_hist_sketch_cascade_and_quantiles(spark):
         bigger = [x for x in bounds if x >= kth]
         want = bigger[0] if bigger else bounds[-1]
         assert r["p50"] == want, (kth, r["p50"], want)
-
-
-def test_merge_tiers_equals_from_scratch(spark, transcripts):
-    long = features.to_long(
-        features.derive_features(transcripts.where(F.col("conv_id") < "conv-00000010")),
-        ["char_rate", "latency_s"],
-    ).cache()
-    cutoff = long.agg(F.expr("percentile(cast(ts as double), 0.7)")).first()[0]
-    on_time = rollup.rollup_from_raw(
-        long.where(F.col("ts").cast("double") < cutoff), "1m")
-    late = rollup.rollup_from_raw(
-        long.where(F.col("ts").cast("double") >= cutoff), "1m")
-    merged = rollup.merge_tiers(on_time, late).toPandas().set_index(
-        ["conv_id", "bucket_ts", "metric"]).sort_index()
-    direct = rollup.rollup_from_raw(long, "1m").toPandas().set_index(
-        ["conv_id", "bucket_ts", "metric"]).sort_index()
-    assert len(merged) == len(direct)
-    assert (merged["cnt"] == direct["cnt"]).all()
-    assert (merged["min"] == direct["min"]).all()
-    assert (merged["max"] == direct["max"]).all()
-    # sum/sumsq: float re-association only (disjoint partials)
-    assert np.allclose(merged["sum"], direct["sum"], rtol=1e-12)
-    assert np.allclose(merged["sumsq"], direct["sumsq"], rtol=1e-12)
-
-
-def test_merge_tiers_empty_delta_is_identity(spark, transcripts):
-    long = features.to_long(
-        features.derive_features(transcripts.where(F.col("conv_id") < "conv-00000005")),
-        ["char_rate"],
-    )
-    t = rollup.rollup_from_raw(long, "1m")
-    empty = t.where(F.lit(False))
-    merged = rollup.merge_tiers(t, empty)
-    a = t.toPandas().sort_values(["conv_id", "bucket_ts", "metric"]).reset_index(drop=True)
-    b = merged.toPandas().sort_values(["conv_id", "bucket_ts", "metric"]).reset_index(drop=True)
-    assert a.equals(b)
 
 
 def test_cube_rollup_all_grouping_sets(spark):

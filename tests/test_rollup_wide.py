@@ -1,11 +1,20 @@
-"""rollup_from_raw_wide must equal the long-path rollup exactly (it is a
-shuffle-volume optimization, not a semantics change)."""
+"""The wide form of the STATS rollup/cascade (``metrics=[...]``) must equal
+the long-path rollup exactly (it is a shuffle-volume optimization, not a
+semantics change)."""
 
 from __future__ import annotations
 
 import pandas as pd
 
 from tsengine import features, rollup
+
+
+S = rollup.STATS
+
+
+def _wide_long(wide, metrics, tier):
+    """The wide rollup viewed in the long tier format."""
+    return rollup.unpivot_stats(rollup.rollup(wide, S, tier, metrics), metrics)
 
 
 def _canon(df):
@@ -16,46 +25,46 @@ def _canon(df):
 def test_wide_equals_long(transcripts):
     wide = features.derive_features_chunked(transcripts)
     long = features.to_long(wide)
-    a = _canon(rollup.rollup_from_raw(long, "1m"))
-    b = _canon(rollup.rollup_from_raw_wide(wide, features.DEFAULT_METRICS, "1m"))
+    a = _canon(rollup.rollup(long, S, "1m"))
+    b = _canon(_wide_long(wide, features.DEFAULT_METRICS, "1m"))
     pd.testing.assert_frame_equal(a, b, rtol=1e-12)
 
 
 def test_wide_cascade_consistent(transcripts):
     wide = features.derive_features_chunked(transcripts)
-    t1m = rollup.rollup_from_raw_wide(wide, features.DEFAULT_METRICS, "1m")
-    t1h = rollup.cascade(t1m, "1h")
+    t1m = _wide_long(wide, features.DEFAULT_METRICS, "1m")
+    t1h = rollup.cascade(t1m, S, "1h")
     long = features.to_long(wide)
-    direct = _canon(rollup.rollup_from_raw(long, "1h"))
+    direct = _canon(rollup.rollup(long, S, "1h"))
     pd.testing.assert_frame_equal(_canon(t1h), direct, rtol=1e-9)
 
 
 def test_cascade_wide_equals_long_cascade(transcripts):
-    """cascade_wide must reproduce the long-path cascade at every tier —
+    """The wide cascade must reproduce the long-path cascade at every tier —
     it is the same shuffle-volume optimization applied to the cascade."""
     mets = features.DEFAULT_METRICS
     wide = features.derive_features_chunked(transcripts)
-    g1m = rollup.rollup_from_raw_wide_stats(wide, mets, "1m")
-    t1m_long = rollup.rollup_from_raw_wide(wide, mets, "1m")
+    g1m = rollup.rollup(wide, S, "1m", mets)
+    t1m_long = _wide_long(wide, mets, "1m")
 
-    g1h = rollup.cascade_wide(g1m, mets, "1h")
+    g1h = rollup.cascade(g1m, S, "1h", mets)
     a = _canon(rollup.unpivot_stats(g1h, mets))
-    b = _canon(rollup.cascade(t1m_long, "1h"))
+    b = _canon(rollup.cascade(t1m_long, S, "1h"))
     pd.testing.assert_frame_equal(a, b, rtol=1e-9)
 
-    g1d = rollup.cascade_wide(g1h, mets, "1d")
+    g1d = rollup.cascade(g1h, S, "1d", mets)
     c = _canon(rollup.unpivot_stats(g1d, mets))
-    d = _canon(rollup.cascade(rollup.cascade(t1m_long, "1h"), "1d"))
+    d = _canon(rollup.cascade(rollup.cascade(t1m_long, S, "1h"), S, "1d"))
     pd.testing.assert_frame_equal(c, d, rtol=1e-9)
 
 
 def test_unpivot_stats_roundtrips_wide_rollup(transcripts):
-    """unpivot_stats(rollup_from_raw_wide_stats(...)) ≡ rollup_from_raw_wide
+    """unpivot_stats(wide rollup) ≡ the long-format view of the wide rollup
     (the public long tier is a pure view of the wide scratch)."""
     mets = features.DEFAULT_METRICS
     wide = features.derive_features_chunked(transcripts)
-    a = _canon(rollup.unpivot_stats(rollup.rollup_from_raw_wide_stats(wide, mets, "1m"), mets))
-    b = _canon(rollup.rollup_from_raw_wide(wide, mets, "1m"))
+    a = _canon(rollup.unpivot_stats(rollup.rollup(wide, S, "1m", mets), mets))
+    b = _canon(_wide_long(wide, mets, "1m"))
     pd.testing.assert_frame_equal(a, b, rtol=1e-12)
 
 
@@ -66,16 +75,16 @@ def test_publish_cascade_wide_matches_sequential(transcripts, spark, tmp_path):
     mets = features.DEFAULT_METRICS
     out = str(tmp_path / "tiers")
     wide = features.derive_features_chunked(transcripts)
-    g1m = rollup.rollup_from_raw_wide_stats(wide, mets, "1m")
+    g1m = rollup.rollup(wide, S, "1m", mets)
     g1m.write.mode("overwrite").parquet(f"{out}/tier_1m_wide")
     rollup.publish_cascade_wide(spark, out, mets)
 
     g1m_r = spark.read.parquet(f"{out}/tier_1m_wide")
     seq = {
         "1m": rollup.unpivot_stats(g1m_r, mets),
-        "1h": rollup.unpivot_stats(rollup.cascade_wide(g1m_r, mets, "1h"), mets),
+        "1h": rollup.unpivot_stats(rollup.cascade(g1m_r, S, "1h", mets), mets),
         "1d": rollup.unpivot_stats(
-            rollup.cascade_wide(rollup.cascade_wide(g1m_r, mets, "1h"), mets, "1d"),
+            rollup.cascade(rollup.cascade(g1m_r, S, "1h", mets), S, "1d", mets),
             mets,
         ),
     }

@@ -121,6 +121,32 @@ def test_moments_shift_invariance(spark):
     assert abs(lo["kurt_excess"] - hi["kurt_excess"]) < 1e-3
 
 
+def test_moments_rejects_nan(spark):
+    df = _series_df(spark, [1.0, 2.0, float("nan"), 4.0, 7.0])
+    with pytest.raises(Exception, match="non-NaN"):
+        indicators.moments(df).collect()
+
+
+def test_moments_null_semantics_unchanged(spark):
+    # nulls count in n (count(*)) and are skipped in the sums — the
+    # contract the SQL oracle shares
+    vals = [3.0, None, 1.0, 4.0, None, 1.0, 5.0, 9.0, 2.0]
+    rows = [("c1", "m", i, v) for i, v in enumerate(vals)]
+    df = spark.createDataFrame(
+        rows, "conv_id string, metric string, event_id long, value double"
+    )
+    r = indicators.moments(df).toPandas().iloc[0]
+    a = np.asarray([v for v in vals if v is not None])
+    n = len(vals)
+    mn = a.min()
+    md = (a - mn).sum() / n
+    assert r["n_obs"] == n
+    assert r["mean"] == pytest.approx(round(mn + md, 6), abs=1e-9)
+    assert r["var_pop"] == pytest.approx(
+        round(((a - mn) ** 2).sum() / n - md * md, 6), abs=1e-9
+    )
+
+
 def _np_hurst(vals, sizes):
     """numpy twin of anomaly.hurst_rs."""
     x = np.asarray(vals, dtype=np.float64)

@@ -55,7 +55,7 @@ def test_streaming_tier_matches_batch(spark, tmp_path):
     metrics = ["n_chars", "tool_call", "is_user", "is_assistant"]
     wide = features.derive_features(t)
     long = features.to_long(wide, metrics)
-    batch = rollup.rollup_from_raw(long, "1m").toPandas()
+    batch = rollup.rollup(long, rollup.STATS, "1m").toPandas()
 
     merged = got.merge(batch, on=key, suffixes=("_s", "_b"), how="left")
     assert merged["cnt_b"].notna().all(), "streamed a window the batch doesn't have"
@@ -282,9 +282,7 @@ def test_streaming_m4_matches_batch(spark, tmp_path):
     key = ["conv_id", "bucket_ts", "metric"]
     assert not got.duplicated(subset=key).any()
 
-    batch = rolling.m4_downsample(
-        to_long_stateless(t), bucket="minute", tiebreak=None
-    ).toPandas()
+    batch = rolling.m4_downsample(to_long_stateless(t), "1m").toPandas()
     merged = got.merge(batch, on=key, suffixes=("_s", "_b"), how="left")
     assert merged["cnt_b"].notna().all(), "streamed a window the batch doesn't have"
     for c in ["cnt", "v_first", "v_last", "v_min", "v_max",

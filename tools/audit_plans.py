@@ -81,9 +81,10 @@ def main() -> None:
     spark = get_spark(master="local[4]")
     ev = eq._events_long(spark, sf)
 
-    audit("tier_1m (rollup)", rollup.rollup_from_raw(ev, "1m"),
+    S = rollup.STATS
+    audit("tier_1m (rollup)", rollup.rollup(ev, S, "1m"),
           ["partial_agg", "codegen"])
-    audit("tier cascade 1h", rollup.cascade(rollup.rollup_from_raw(ev, "1m"), "1h"),
+    audit("tier cascade 1h", rollup.cascade(rollup.rollup(ev, S, "1m"), S, "1h"),
           ["partial_agg", "codegen"])
     # the pipeline's actual cascade path: wide-stats 1m → wide 1h → long view
     _tr = spark.read.parquet(f"{sf}/events.parquet").select(
@@ -92,9 +93,9 @@ def main() -> None:
         F.col("value").alias("m_a"),
         (F.col("value") * 2).alias("m_b"),
     )
-    _g1m = rollup.rollup_from_raw_wide_stats(_tr, ["m_a", "m_b"], "1m")
+    _g1m = rollup.rollup(_tr, S, "1m", ["m_a", "m_b"])
     audit("tier cascade wide 1h (pipeline path)",
-          rollup.unpivot_stats(rollup.cascade_wide(_g1m, ["m_a", "m_b"], "1h"),
+          rollup.unpivot_stats(rollup.cascade(_g1m, S, "1h", ["m_a", "m_b"]),
                                ["m_a", "m_b"]),
           ["partial_agg", "codegen", "no_cartesian"])
     audit("filter pushdown (metric=view)",
@@ -181,7 +182,7 @@ def main() -> None:
     # no hash-agg codegen exists for them (struct-min is identical), but
     # the partial (map-side) aggregate still reduces the exchange to one
     # row per group, which is the property that matters at 100 TB
-    audit("ohlc candles", rollup.ohlc(ev, tier="1h"),
+    audit("ohlc candles", rollup.rollup(ev, rollup.OHLC, "1h"),
           ["partial_agg", "single_exchange"])
     audit("cusum (closed form)",
           temporal.cusum(ev, k=55.0, tiebreak="event_id"),
@@ -252,10 +253,19 @@ def main() -> None:
     # groupBys share a prefix key and map-side-combine
     audit("m4 downsample", rolling.m4_downsample(ev),
           ["partial_agg", "single_exchange"])
+    # the spec-derived cascades of the histogram and M4 summaries: each
+    # merge step is another map-side-combined groupBy of the finer tier
+    audit("hist cascade 1h",
+          rollup.cascade(rollup.rollup(ev, rollup.HIST, "1m"), rollup.HIST, "1h"),
+          ["partial_agg", "no_cartesian"])
+    audit("m4 cascade 1d",
+          rolling.m4_finalize(rollup.cascade(
+              rollup.rollup(ev, rolling.M4, "1h"), rolling.M4, "1d")),
+          ["partial_agg", "no_cartesian"])
     audit("sax words (window + prefix groupBys)",
           anomaly.sax_words(ev),
           ["single_exchange", "no_cartesian"])
-    hourly_m = rollup.rollup_from_raw(ev, "1h").select(
+    hourly_m = rollup.rollup(ev, S, "1h").select(
         "conv_id", "metric", "bucket_ts",
         F.round(F.col("sum") / F.col("cnt"), 6).alias("mean_v"))
     audit("seasonal backtest (tier self equi-join)",
@@ -269,7 +279,7 @@ def main() -> None:
     # theil-sen's pairwise stage must be a co-keyed EQUI-join of the tiny
     # hourly tier (the x2 > x1 predicate rides as a post-join filter, not
     # a join strategy); rank-norm is one window sort on the series key
-    hourly_ts = rollup.rollup_from_raw(ev, "1h").select(
+    hourly_ts = rollup.rollup(ev, S, "1h").select(
         "conv_id", "metric",
         F.date_trunc("day", F.col("bucket_ts")).alias("day"),
         F.hour("bucket_ts").cast("long").alias("x"),
@@ -331,9 +341,10 @@ def main() -> None:
     # with map-side combine — never a raw re-read
     cutoff = F.lit("2024-01-25 00:00:00").cast("timestamp")
     audit("tier merge (late-data refresh)",
-          rollup.merge_tiers(
-              rollup.rollup_from_raw(ev.where(F.col("ts") < cutoff), "1m"),
-              rollup.rollup_from_raw(ev.where(F.col("ts") >= cutoff), "1m")),
+          rollup.cascade(
+              rollup.rollup(ev.where(F.col("ts") < cutoff), S, "1m").unionByName(
+                  rollup.rollup(ev.where(F.col("ts") >= cutoff), S, "1m")),
+              S, "1m"),
           ["partial_agg", "no_cartesian"])
 
     # continuation pack: ramps are two window passes + one island groupBy

@@ -862,6 +862,28 @@ def hill_tail(
     )
 
 
+# cells of the pairwise sign block ``_mk_s`` holds at once (int64: 8 MiB
+# per temporary), so per-series memory is O(n + block), not O(n²)
+_MK_BLOCK_CELLS = 1 << 20
+
+
+def _mk_s(x: "np.ndarray") -> int:
+    """Mann-Kendall S = Σ_{i<j} sign(x_j − x_i), exact on integers. The
+    upper triangle is summed in blocks of rows sized so that one block
+    holds at most ``_MK_BLOCK_CELLS`` cells; a short series is one block."""
+    import numpy as np
+
+    n = len(x)
+    rows = max(1, _MK_BLOCK_CELLS // max(n, 1))
+    s = 0
+    for i0 in range(0, n - 1, rows):
+        # rows i in [i0, i0+rows) against columns j in [i0+1, n): the
+        # upper triangle j > i is column c = j-i0-1 ≥ row r = i-i0
+        d = np.sign(x[None, i0 + 1:] - x[i0:i0 + rows, None])
+        s += int(np.triu(d).sum())
+    return s
+
+
 def mann_kendall(
     df: DataFrame, value_scale: int = 100, min_n: int = 8
 ) -> DataFrame:
@@ -879,6 +901,8 @@ def mann_kendall(
     ((s∓1)/sqrt(var) on doubles), but one series-keyed exchange instead
     of two plus an O(n²)-row join intermediate; the final 5-dp round
     stays a Spark-side expression like every other oracle-gated float.
+    The pair signs are summed in bounded row blocks (``_mk_s``), so a
+    long series costs O(n²) time but not O(n²) memory.
     Requires non-null values (the long feature stream contract).
     """
     import numpy as np
@@ -903,8 +927,7 @@ def mann_kendall(
             if n < min_n:
                 continue
             x = c[s:e]
-            d = np.sign(x[None, :] - x[:, None])
-            s_stat = int(np.triu(d, 1).sum())
+            s_stat = _mk_s(x)
             _, cnt = np.unique(x, return_counts=True)
             tt = cnt[cnt > 1].astype(np.int64)
             tie = int((tt * (tt - 1) * (2 * tt + 5)).sum())

@@ -183,25 +183,32 @@ def moments(df: DataFrame, min_n: int = 3) -> DataFrame:
     `m2 * sqrt(m2)` because sqrt is IEEE-exact everywhere while pow()
     may differ by an ulp between libm and the JVM. Degenerate series
     (n < min_n or relative m2 below 1e-12) drop on both engines. Null
-    values are skipped in place (the SQL sum contract); float NaN
-    values are treated the same way — pass pre-filtered data if the
-    distinction matters."""
+    values count in n (``count(*)``) and are skipped in the sums (the
+    SQL sum contract, which the oracle shares); a float NaN value raises
+    ``ValueError`` — skipping it in the sums while counting it in n would
+    silently dilute every statistic."""
     import numpy as np
     import pandas as pd
 
     from tsengine.session import sorted_batch_apply
 
     order = [c for c in ("ts", "event_id") if c in df.columns]
-    t = df.select("conv_id", "metric", *order, "value")
+    # Arrow turns nulls into NaN on the pandas side, so the NaN flag is
+    # taken in Spark, where the two are still distinct
+    t = df.select(
+        "conv_id", "metric", *order, "value", F.isnan("value").alias("_nan")
+    )
 
     def batch(pdf: pd.DataFrame, starts, ends) -> pd.DataFrame:
+        if pdf["_nan"].any():
+            raise ValueError("moments requires non-NaN values")
         v = pdf["value"].to_numpy(dtype=np.float64)
         conv = pdf["conv_id"].to_numpy()
         met = pdf["metric"].to_numpy()
         rows = []
         for s, e in zip(starts, ends):
             x = v[s:e]
-            fx = x[~np.isnan(x)]
+            fx = x[~np.isnan(x)]  # drops the nulls (NaN raised above)
             if len(fx) == 0:
                 # all-null series: null sums fail the m2 filter on the
                 # SQL path — emitting nothing is the identical outcome

@@ -88,7 +88,7 @@ def run_pipeline(
                 # the coarser tiers re-aggregate the wide scratch, so no
                 # shuffle in the whole cascade carries a string metric key.
                 # Public long tiers are post-agg unpivots of the scratch.
-                g1m = rollup.rollup_from_raw_wide_stats(wide, mets, "1m")
+                g1m = rollup.rollup(wide, rollup.STATS, "1m", mets)
                 g1m.write.mode("overwrite").parquet(f"{paths['1m_wide']}/unit={k}")
                 # overlapped publish: each tier's long-form unpivot write
                 # runs concurrently with the next cascade level — the

@@ -4,10 +4,26 @@ rewemo's rollups are a manual chain: hourly series → daily resample mean
 (`ncep/example_solar.py:263`) → per-location summary means
 (`ncep/wind.py:232-233`). We formalize that as 1m→1h→1d cascading tiers
 where EVERY tier is computed from the previous one, never from raw data —
-possible because tier stats are restricted to reaggregable components
-(count, sum, min, max, sum-of-squares). Derived views (mean, population
-std) are computed at read time; median is exact only at the finest tier
-(``percentile_approx`` above it), per SURVEY §7 hard-part (d).
+possible because every tier stat is a MERGEABLE SUMMARY.
+
+Each summary is defined once, as a ``Summary`` spec of two dicts of
+named aggregate Columns: ``partial`` (raw rows → state) and ``merge``
+(finer state → coarser state). Everything else is derived from the spec
+(the synopsis-framework idea of Condor, VLDB 2021):
+
+- ``rollup(df, spec, tier)``: a tier from raw rows;
+- ``cascade(df, spec, to_tier)``: a coarser tier from a finer one; the
+  late-data refresh is ``cascade(existing ∪ delta, spec, same tier)``;
+- ``metrics=[...]`` on either: the WIDE form, the spec applied per
+  metric column with an ``{m}__`` prefix (what ``jobs.run_pipeline``
+  writes);
+- ``partial_aggs``: the list the streaming windowed aggregations use.
+
+Specs: ``STATS`` (cnt, sum, min, max, sumsq), ``HIST`` (fixed-boundary
+histogram), ``OHLC`` (candles) here, and ``rolling.M4`` (chart
+extrema). Derived views (mean, population std, quantile estimates, M4
+points) are computed at read time; median is exact only at the finest
+tier (``percentile_approx`` above it), per SURVEY §7 hard-part (d).
 
 Shuffle analysis (100 TB): the 1m tier is the only shuffle that touches raw
 volume — keyed by (conv_id, minute, metric), map-side partial aggregation
@@ -19,70 +35,119 @@ per step). All three tiers share the leading key conv_id, so writing the
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable, NamedTuple
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 TIER_SPECS = {"1m": "minute", "1h": "hour", "1d": "day"}
 TIER_ORDER = ["1m", "1h", "1d"]
 
-STAT_COLS = ["cnt", "sum", "min", "max", "sumsq"]
+
+class Summary(NamedTuple):
+    """One mergeable summary. ``partial(v, ts, seq)`` maps the raw value,
+    its timestamp and its tiebreak (``None`` when the input has no
+    ``event_id``) to the state's named aggregates; ``merge(s)`` maps the
+    finer state — ``s(name)`` is its component column — to the coarser
+    state's aggregates under the SAME names, so merges chain through any
+    number of tiers (merge ≡ rebuild, tests/test_summaries.py)."""
+
+    partial: Callable[[Column, Column, Column | None], dict[str, Column]]
+    merge: Callable[[Callable[[str], Column]], dict[str, Column]]
 
 
-def rollup_from_raw(features_long: DataFrame, tier: str = "1m") -> DataFrame:
-    """Finest tier from the long feature stream.
-
-    ≙ `df.resample('D').mean()` (`ncep/example_solar.py:263`) generalized to
-    reaggregable components. date_trunc keeps the bucket as a plain column
-    (cheaper than F.window's struct; identical semantics for tumbling
-    calendar windows)."""
-    unit = TIER_SPECS[tier]
-    return (
-        features_long.where(F.col("value").isNotNull())
-        .groupBy(
-            "conv_id",
-            F.date_trunc(unit, F.col("ts")).alias("bucket_ts"),
-            "metric",
-        )
-        .agg(
-            F.count("value").alias("cnt"),
-            F.sum("value").alias("sum"),
-            F.min("value").alias("min"),
-            F.max("value").alias("max"),
-            F.sum(F.col("value") * F.col("value")).alias("sumsq"),
-        )
-    )
+# reaggregable moments: every component is a commutative monoid, exact for
+# cnt/min/max; sum/sumsq are float-order-dependent in the last ulps
+# (inherent to double addition; tests compare with rel-tol)
+STATS = Summary(
+    partial=lambda v, ts, seq: {
+        "cnt": F.count(v),
+        "sum": F.sum(v),
+        "min": F.min(v),
+        "max": F.max(v),
+        "sumsq": F.sum(v * v),
+    },
+    merge=lambda s: {
+        "cnt": F.sum(s("cnt")),
+        "sum": F.sum(s("sum")),
+        "min": F.min(s("min")),
+        "max": F.max(s("max")),
+        "sumsq": F.sum(s("sumsq")),
+    },
+)
 
 
-def rollup_from_raw_wide_stats(
-    wide_features: DataFrame, metrics: list[str], tier: str = "1m"
+def partial_aggs(
+    spec: Summary, df: DataFrame, metric: str | None = None
+) -> list[Column]:
+    """``spec.partial`` over ``df``'s ``value`` column, each aggregate
+    named by its component — or, with ``metric``, over the wide column
+    ``metric``, named ``{metric}__{component}``. Timestamp ties break on
+    ``event_id`` when ``df`` carries one (OHLC open/close, M4
+    first/last)."""
+    seq = F.col("event_id") if "event_id" in df.columns else None
+    aggs = spec.partial(F.col(metric or "value"), F.col("ts"), seq)
+    prefix = f"{metric}__" if metric else ""
+    return [c.alias(prefix + name) for name, c in aggs.items()]
+
+
+def _merge_aggs(spec: Summary, metric: str | None = None) -> list[Column]:
+    prefix = f"{metric}__" if metric else ""
+    aggs = spec.merge(lambda name: F.col(prefix + name))
+    return [c.alias(prefix + name) for name, c in aggs.items()]
+
+
+def rollup(
+    df: DataFrame, spec: Summary, tier: str, metrics: list[str] | None = None
 ) -> DataFrame:
-    """Finest tier in WIDE-STATS form: one row per (conv_id, bucket_ts)
-    carrying ``{m}__cnt/__sum/__min/__max/__sumsq`` for every metric —
-    this is the shape TimescaleDB materializes continuous aggregates in
-    (one row per bucket, per-column stat columns).
+    """A tier from raw rows: group by the keys plus ``date_trunc(tier,
+    ts)`` and aggregate ``spec.partial``.
 
-    Why it matters at 100 TB: the long path multiplies raw rows by
-    |metrics| BEFORE the shuffle (7 metrics → 7× exchange volume); this
-    path shuffles one row per (conv, bucket) carrying all metrics' partial
-    stats — the exchange is the pipeline's only raw-volume shuffle, so this
-    is a ~|metrics|× cut of total shuffle bytes. Keeping the CASCADE in
-    this form too (``cascade_wide``) extends the same cut to every tier:
-    no per-metric row inflation and no string metric key ever enters a
-    shuffle; the long public view is a post-agg ``unpivot_stats`` stack."""
-    unit = TIER_SPECS[tier]
-    aggs = []
-    for m in metrics:
-        v = F.col(m)
-        aggs += [
-            F.count(v).alias(f"{m}__cnt"),
-            F.sum(v).alias(f"{m}__sum"),
-            F.min(v).alias(f"{m}__min"),
-            F.max(v).alias(f"{m}__max"),
-            F.sum(v * v).alias(f"{m}__sumsq"),
-        ]
-    return wide_features.groupBy(
-        "conv_id", F.date_trunc(unit, F.col("ts")).alias("bucket_ts")
-    ).agg(*aggs)
+    Long form (``metrics=None``): (conv_id, ts, metric, value) rows; null
+    values are dropped once here — a struct or argmin with a null field
+    still competes in min/max, and an all-null bucket does not exist in
+    the tier. Key (conv_id, bucket_ts, metric).
+
+    Wide form: one value column per metric and the key (conv_id,
+    bucket_ts), components named ``{m}__{component}`` — the shape
+    TimescaleDB materializes continuous aggregates in. At 100 TB the long
+    path multiplies raw rows by |metrics| BEFORE the shuffle; this one
+    shuffles one row per (conv, bucket) carrying all metrics' partials —
+    a ~|metrics|× cut of the pipeline's only raw-volume exchange, and no
+    string metric key ever enters a shuffle. Nothing is dropped, so it
+    needs a spec whose aggregates skip nulls (STATS, HIST): an all-null
+    metric bucket gets cnt 0, which ``unpivot_stats`` drops.
+
+    date_trunc keeps the bucket a plain column (cheaper than F.window's
+    struct; identical semantics for tumbling calendar windows)."""
+    bucket = F.date_trunc(TIER_SPECS[tier], F.col("ts")).alias("bucket_ts")
+    if metrics is None:
+        return (
+            df.where(F.col("value").isNotNull())
+            .groupBy("conv_id", bucket, "metric")
+            .agg(*partial_aggs(spec, df))
+        )
+    aggs = [a for m in metrics for a in partial_aggs(spec, df, m)]
+    return df.groupBy("conv_id", bucket).agg(*aggs)
+
+
+def cascade(
+    df: DataFrame, spec: Summary, to_tier: str, metrics: list[str] | None = None
+) -> DataFrame:
+    """A coarser tier from a finer one of the same form (1m→1h, 1h→1d):
+    ``spec.merge`` grouped by the keys plus ``date_trunc(to_tier,
+    bucket_ts)`` — never a raw re-read. Inside the aggregates
+    ``bucket_ts`` is still the FINER bucket (OHLC's open/close pick by
+    it). With ``to_tier`` equal to the input's tier this is the
+    continuous-aggregate refresh merge: fold a late batch's partials into
+    an existing tier as ``cascade(existing.unionByName(delta), spec,
+    tier)`` — untouched buckets pass through unchanged, and the exchange
+    carries tier rows, not raw rows (TimescaleDB's refresh upsert)."""
+    bucket = F.date_trunc(TIER_SPECS[to_tier], F.col("bucket_ts")).alias("bucket_ts")
+    if metrics is None:
+        return df.groupBy("conv_id", bucket, "metric").agg(*_merge_aggs(spec))
+    aggs = [a for m in metrics for a in _merge_aggs(spec, m)]
+    return df.groupBy("conv_id", bucket).agg(*aggs)
 
 
 def unpivot_stats(g: DataFrame, metrics: list[str]) -> DataFrame:
@@ -103,41 +168,6 @@ def unpivot_stats(g: DataFrame, metrics: list[str]) -> DataFrame:
             f"stack({len(metrics)}, {pairs}) as (metric, cnt, sum, min, max, sumsq)"
         ),
     ).where(F.col("cnt") > 0)
-
-
-def rollup_from_raw_wide(
-    wide_features: DataFrame, metrics: list[str], tier: str = "1m"
-) -> DataFrame:
-    """Same output as ``to_long() → rollup_from_raw()`` — wide-exchange
-    aggregation (``rollup_from_raw_wide_stats``) + post-agg unpivot."""
-    return unpivot_stats(
-        rollup_from_raw_wide_stats(wide_features, metrics, tier), metrics
-    )
-
-
-def cascade_wide(g: DataFrame, metrics: list[str], to_tier: str) -> DataFrame:
-    """Re-aggregate a finer WIDE-STATS tier into a coarser one without
-    leaving the wide form (1m→1h, 1h→1d).
-
-    vs ``cascade`` on the long tier: |metrics|× fewer input rows per
-    exchange and a (conv_id, bucket) key with no metric string — at 100 TB
-    the cascade never re-inflates to per-metric rows. Null semantics match
-    the long path: an all-null metric bucket has cnt 0 and null sum/min/
-    max/sumsq, and Spark's sum/min/max skip nulls, so it contributes
-    nothing — exactly as its absent long-form row would."""
-    unit = TIER_SPECS[to_tier]
-    aggs = []
-    for m in metrics:
-        aggs += [
-            F.sum(f"{m}__cnt").alias(f"{m}__cnt"),
-            F.sum(f"{m}__sum").alias(f"{m}__sum"),
-            F.min(f"{m}__min").alias(f"{m}__min"),
-            F.max(f"{m}__max").alias(f"{m}__max"),
-            F.sum(f"{m}__sumsq").alias(f"{m}__sumsq"),
-        ]
-    return g.groupBy(
-        "conv_id", F.date_trunc(unit, F.col("bucket_ts")).alias("bucket_ts")
-    ).agg(*aggs)
 
 
 def publish_cascade_wide(
@@ -172,7 +202,7 @@ def publish_cascade_wide(
 
     for i in range(1, len(tiers)):
         g = spark.read.parquet(f"{out_root}/tier_{tiers[i - 1]}_wide{suffix}")
-        nxt = cascade_wide(g, metrics, tiers[i])
+        nxt = cascade(g, STATS, tiers[i], metrics)
         with ThreadPoolExecutor(2) as ex:
             fin = ex.submit(_publish, g, tiers[i - 1])
             if i == len(tiers) - 1:
@@ -186,38 +216,6 @@ def publish_cascade_wide(
                 )
             fin.result()
             nxt_f.result()
-
-
-def cascade(tier_df: DataFrame, to_tier: str) -> DataFrame:
-    """Re-aggregate a finer tier into a coarser one (1m→1h, 1h→1d).
-
-    Pure component re-aggregation — exact, order-independent for cnt/min/
-    max; sum/sumsq are float-order-dependent in the last ulps (inherent to
-    double addition; tests compare with rel-tol)."""
-    unit = TIER_SPECS[to_tier]
-    return (
-        tier_df.groupBy(
-            "conv_id",
-            F.date_trunc(unit, F.col("bucket_ts")).alias("bucket_ts"),
-            "metric",
-        )
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum").alias("sum"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-            F.sum("sumsq").alias("sumsq"),
-        )
-    )
-
-
-def build_tiers(features_long: DataFrame) -> dict[str, DataFrame]:
-    """The full cascade. Callers should persist/write the 1m tier before
-    cascading so raw data is scanned exactly once."""
-    t1m = rollup_from_raw(features_long, "1m")
-    t1h = cascade(t1m, "1h")
-    t1d = cascade(t1h, "1d")
-    return {"1m": t1m, "1h": t1h, "1d": t1d}
 
 
 def finalize(tier_df: DataFrame) -> DataFrame:
@@ -254,50 +252,34 @@ def hist_bin(value: F.Column, bounds: list[float]) -> F.Column:
     return F.size(F.filter(arr, lambda b: value > b))
 
 
-def rollup_hist(
-    features_long: DataFrame,
-    bounds: list[float] | None = None,
-    tier: str = "1m",
-) -> DataFrame:
-    """Finest tier with a histogram sketch column: (keys, cnt,
-    hist array<long> of len(bounds)+1 bin counts). The hist is built as
-    B+1 conditional-sum aggregates assembled into one array — every one
-    of them map-side partial-aggregated, so the exchange still carries one
-    row per group."""
-    bounds = bounds or DEFAULT_HIST_BOUNDS
-    unit = TIER_SPECS[tier]
-    nbins = len(bounds) + 1
-    b = hist_bin(F.col("value"), bounds)
-    base = features_long.where(F.col("value").isNotNull()).withColumn("_bin", b)
-    sums = [
-        F.sum(F.when(F.col("_bin") == i, F.lit(1)).otherwise(F.lit(0)))
-        .cast("long")
-        .alias(f"_h{i}")
-        for i in range(nbins)
-    ]
-    g = base.groupBy(
-        "conv_id", F.date_trunc(unit, F.col("ts")).alias("bucket_ts"), "metric"
-    ).agg(F.count("value").alias("cnt"), *sums)
-    return g.select(
-        "conv_id", "bucket_ts", "metric", "cnt",
-        F.array(*[F.col(f"_h{i}") for i in range(nbins)]).alias("hist"),
+def _hist_partial(v, ts, seq):
+    # bin i ⇔ hist_bin(v) == i, as plain comparisons (one per bin, no
+    # per-bin re-evaluation of the filter); every bin count is map-side
+    # partial-aggregated, so the exchange still carries one row per group
+    b = DEFAULT_HIST_BOUNDS
+    in_bin = (
+        [v <= b[0]]
+        + [(v > lo) & (v <= hi) for lo, hi in zip(b, b[1:])]
+        + [v > b[-1]]
     )
+    return {
+        "cnt": F.count(v),
+        "hist": F.array(*[F.count(F.when(c, 1)) for c in in_bin]),
+    }
 
 
-def cascade_hist(hist_df: DataFrame, to_tier: str, nbins: int) -> DataFrame:
-    """Coarser tier from a finer hist tier: element-wise array sum (exact,
-    order-independent — integer adds), same partial-agg shape as cascade()."""
-    unit = TIER_SPECS[to_tier]
-    sums = [
-        F.sum(F.element_at("hist", i + 1)).alias(f"_h{i}") for i in range(nbins)
-    ]
-    g = hist_df.groupBy(
-        "conv_id", F.date_trunc(unit, F.col("bucket_ts")).alias("bucket_ts"), "metric"
-    ).agg(F.sum("cnt").alias("cnt"), *sums)
-    return g.select(
-        "conv_id", "bucket_ts", "metric", "cnt",
-        F.array(*[F.col(f"_h{i}") for i in range(nbins)]).alias("hist"),
-    )
+# (cnt, hist array<long> of len(DEFAULT_HIST_BOUNDS)+1 bin counts); the
+# merge is an element-wise array sum — exact, order-independent integer adds
+HIST = Summary(
+    partial=_hist_partial,
+    merge=lambda s: {
+        "cnt": F.sum(s("cnt")),
+        "hist": F.array(*[
+            F.sum(F.element_at(s("hist"), i + 1))
+            for i in range(len(DEFAULT_HIST_BOUNDS) + 1)
+        ]),
+    },
+)
 
 
 def hist_quantile(q: float, bounds: list[float]) -> F.Column:
@@ -362,109 +344,42 @@ def session_rollup(
     )
 
 
-def ohlc(
-    df: DataFrame,
-    tier: str = "1h",
-    on: tuple[str, ...] = ("conv_id", "metric"),
-    ts_col: str = "ts",
-    value_col: str = "value",
-    seq_col: str | None = "event_id",
-) -> DataFrame:
-    """OHLC candle downsample: per (keys, bucket) the opening value
-    (earliest event), high, low, and closing value (latest event) — the
-    financial-chart tier every series UI wants, and like every other tier
-    component it is REAGGREGABLE: 1h candles merge into 1d candles by
-    keeping the open of the earliest/close of the latest sub-bucket and
-    min/max of high/low (see ``cascade_ohlc``).
-
-    open/close use ``min_by``/``max_by`` over the (ts, seq) struct —
-    deterministic even under timestamp ties because ``seq_col`` is unique
-    per series (pass ``seq_col=None`` for streams whose timestamps are
-    already unique per series, e.g. the transcript feature stream). One
-    groupBy = one map-side-combined shuffle; no window sort at all
-    (cheaper than first_value/last_value, which would force a
-    per-partition ordering).
-
-    Physical note: argmin aggregates (min_by or struct-min alike) compile
-    to SortAggregate in Spark 4 — no hash-agg codegen exists for their
-    buffers — but the PARTIAL aggregate still runs map-side, so the
-    exchange carries one row per group; that is the 100 TB property, and
-    `tools/audit_plans.py` pins it."""
-    unit = TIER_SPECS[tier]
-    key = (
-        F.struct(F.col(ts_col), F.col(seq_col))
-        if seq_col is not None
-        else F.col(ts_col)
-    )
-    v = F.col(value_col)
-    return (
-        df.where(v.isNotNull())
-        .groupBy(
-            *on, F.date_trunc(unit, F.col(ts_col)).alias("bucket_ts")
-        )
-        .agg(
-            F.min_by(v, key).alias("open"),
-            F.max(v).alias("high"),
-            F.min(v).alias("low"),
-            F.max_by(v, key).alias("close"),
-            F.count(v).alias("cnt"),
-        )
-    )
+def _ohlc_partial(v, ts, seq):
+    key = F.struct(ts, seq) if seq is not None else ts
+    return {
+        "open": F.min_by(v, key),
+        "high": F.max(v),
+        "low": F.min(v),
+        "close": F.max_by(v, key),
+        "cnt": F.count(v),
+    }
 
 
-def cascade_ohlc(
-    candles: DataFrame,
-    to_tier: str = "1d",
-    on: tuple[str, ...] = ("conv_id", "metric"),
-) -> DataFrame:
-    """Coarser candles from finer ones WITHOUT re-reading raw data:
-    open = open of the earliest sub-bucket, close = close of the latest,
-    high/low = max/min — the OHLC merge algebra (associative, so it
-    cascades through arbitrarily many tiers like cnt/sum/min/max).
-    bucket_ts is unique per (keys, sub-bucket), so min_by/max_by on it is
-    deterministic without a sequence column."""
-    unit = TIER_SPECS[to_tier]
-    return (
-        candles.groupBy(
-            *on, F.date_trunc(unit, F.col("bucket_ts")).alias("bucket_ts")
-        )
-        .agg(
-            F.min_by("open", "bucket_ts").alias("open"),
-            F.max("high").alias("high"),
-            F.min("low").alias("low"),
-            F.max_by("close", "bucket_ts").alias("close"),
-            F.sum("cnt").alias("cnt"),
-        )
-    )
-
-
-def merge_tiers(existing: DataFrame, delta: DataFrame) -> DataFrame:
-    """Continuous-aggregate refresh merge: fold a late-arriving batch's
-    tier partials into an existing tier table of the SAME grain — the
-    upsert half of TimescaleDB's continuous-aggregate refresh, and the
-    reason the tier components are (cnt, sum, min, max, sumsq) instead of
-    finalized mean/std: every component is a commutative monoid, so
-    late data is ONE union + re-aggregation keyed by the tier key, never
-    a re-read of raw history.
-
-    At 100 TB this is the difference between "reprocess the day" and
-    "shuffle the late partials": the delta side is rollup_from_raw over
-    ONLY the late rows (tiny), and the merge exchange carries tier rows,
-    not raw rows. Buckets untouched by the delta pass through unchanged
-    (min/max/sum of a single row are identity); overlapping buckets
-    re-aggregate exactly like `cascade` does — same algebra, same grain.
-    """
-    return (
-        existing.unionByName(delta)
-        .groupBy("conv_id", "bucket_ts", "metric")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum").alias("sum"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-            F.sum("sumsq").alias("sumsq"),
-        )
-    )
+# OHLC candles: per (keys, bucket) the opening value (earliest event),
+# high, low and closing value (latest event) — the financial-chart tier
+# every series UI wants. open/close are min_by/max_by over the (ts,
+# event_id) struct, deterministic under timestamp ties (plain ts for
+# inputs without event_id, e.g. the transcript feature stream); no window
+# sort at all (cheaper than first_value/last_value, which would force a
+# per-partition ordering). The merge keeps the open of the earliest and
+# the close of the latest sub-bucket (bucket_ts is unique per sub-bucket,
+# so no tiebreak is needed) and min/max of high/low.
+#
+# Physical note: argmin aggregates (min_by or struct-min alike) compile to
+# SortAggregate in Spark 4 — no hash-agg codegen exists for their buffers
+# — but the PARTIAL aggregate still runs map-side, so the exchange
+# carries one row per group; that is the 100 TB property, and
+# `tools/audit_plans.py` pins it.
+OHLC = Summary(
+    partial=_ohlc_partial,
+    merge=lambda s: {
+        "open": F.min_by(s("open"), F.col("bucket_ts")),
+        "high": F.max(s("high")),
+        "low": F.min(s("low")),
+        "close": F.max_by(s("close"), F.col("bucket_ts")),
+        "cnt": F.sum(s("cnt")),
+    },
+)
 
 
 def cube_rollup(

@@ -15,8 +15,9 @@ Design:
 - sink = foreachBatch parquet append partitioned by bucket date; on a real
   deployment this is an Iceberg MERGE (idempotent on restart via the
   streaming checkpoint + deterministic window keys).
-- the same ``tier_agg_exprs`` drive batch and streaming — one definition of
-  tier semantics.
+- the windowed aggregations aggregate the batch tiers' own specs
+  (``rollup.partial_aggs`` of ``rollup.STATS`` / ``rolling.M4``), so a
+  stream and the batch rollup share one definition of each summary.
 """
 
 from __future__ import annotations
@@ -25,19 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from tsengine import features
+from tsengine import features, rollup
 from tsengine.schema import TRANSCRIPTS
-
-
-def tier_agg_exprs() -> list:
-    """The reaggregable component set shared by rollup.py and streaming."""
-    return [
-        F.count("value").alias("cnt"),
-        F.sum("value").alias("sum"),
-        F.min("value").alias("min"),
-        F.max("value").alias("max"),
-        F.sum(F.col("value") * F.col("value")).alias("sumsq"),
-    ]
 
 
 def read_transcript_stream(
@@ -78,14 +68,14 @@ def streaming_tier_1m(
 def streaming_tier_long(long: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """(conv_id, ts, metric, value) stream → windowed 1m tier updates —
     the windowed-agg stage shared by every long-format source (transcript
-    signals, event streams). Same component set as the batch tier, so a
-    stream drained with ``trigger(availableNow=True)`` is row-identical to
-    ``rollup.rollup_from_raw`` on the same input (oracle-checked by the
-    ``ts_streaming_tier`` entry)."""
+    signals, event streams). It aggregates ``rollup.STATS``'s partial
+    list, so a stream drained with ``trigger(availableNow=True)`` is
+    row-identical to ``rollup.rollup(..., STATS, "1m")`` on the same
+    input (oracle-checked by the ``ts_streaming_tier`` entry)."""
     return (
         long.withWatermark("ts", watermark)
         .groupBy("conv_id", F.window("ts", "1 minute").alias("w"), "metric")
-        .agg(*tier_agg_exprs())
+        .agg(*rollup.partial_aggs(rollup.STATS, long))
         .select(
             "conv_id",
             F.col("w.start").alias("bucket_ts"),
@@ -103,26 +93,23 @@ def streaming_m4(
     long: DataFrame,
     watermark: str = "10 minutes",
     window: str = "1 minute",
-    tiebreak: str | None = None,
 ) -> DataFrame:
     """(conv_id, ts, metric, value) stream → windowed M4 chart-tier
     updates. The M4 sketch is algebraic (count + four struct min/max),
-    so it streams as a NATIVE windowed aggregation with bounded
-    per-window state — no custom stateful operator, same emit-on-
-    watermark semantics as ``streaming_tier_long``. A stream drained
-    with ``trigger(availableNow=True)`` is row-identical to
-    ``rolling.m4_downsample`` on the same input (parity-tested).
-
-    ``tiebreak=None`` (default) is for streams whose timestamps are
-    unique per series; pass a column name to pin tie order like the
-    batch side does."""
+    so it streams as a NATIVE windowed aggregation of ``rolling.M4``'s
+    partial list with bounded per-window state — no custom stateful
+    operator, same emit-on-watermark semantics as
+    ``streaming_tier_long``. A stream drained with
+    ``trigger(availableNow=True)`` is row-identical to
+    ``rolling.m4_downsample`` on the same input (parity-tested); ties on
+    ts break on ``event_id`` when the stream carries one, as in batch."""
     from tsengine import rolling
 
     agg = (
         long.where(F.col("value").isNotNull())
         .withWatermark("ts", watermark)
         .groupBy("conv_id", F.window("ts", window).alias("w"), "metric")
-        .agg(*rolling.m4_agg_exprs("ts", "value", tiebreak))
+        .agg(*rollup.partial_aggs(rolling.M4, long))
         .withColumn("bucket_ts", F.col("w.start"))
         .drop("w")
     )
